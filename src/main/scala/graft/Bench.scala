@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.obs.TaskLedger
 import graft.util.GraftSession
 
 /** Benchmark main: runs every registered query against
@@ -9,72 +10,42 @@ import graft.util.GraftSession
   * Timing includes plan + execution (count() forces the full plan;
   * results are small post-aggregation so count ≈ materialization cost).
   *
-  * Besides wall time, the artifact carries a per-query `compute`
-  * column measured from task metrics: each query runs under its own
-  * job group, a SparkListener attributes every task's executorRunTime
-  * (+ deserialize + result-serialize) to that group through the
-  * jobStart→stage mapping, and compute = Σ task time / cores — the
-  * ideal-parallel operator cost. wall − compute is the local[32]
-  * per-query scheduling/coordination floor a resident multi-executor
-  * cluster does not pay (measured decomposition, SCALE.md): the
-  * compute column is the number comparable with the reference's
-  * per-query anchor, the wall column is what this harness pays.
+  * Besides wall time, the artifact carries per-query task-metric
+  * columns read from the [[graft.obs.TaskLedger]]: each query runs
+  * under its own job group, and compute = Σ task time / cores — the
+  * ideal-parallel operator cost. wall − compute is the local[N]
+  * per-query scheduling/coordination floor (`graft.Measure decomp`
+  * breaks it down): the compute column is the number comparable with
+  * the reference's per-query anchor, the wall column is what this
+  * harness pays.
+  *
+  * Three time bases per query (the r16 run-to-run adjudication):
+  *   compute — executorRunTime (+deser +result-ser): task WALL on the
+  *             executor thread; inflates under host CPU steal/IO stall
+  *   cpu     — executorCpuTime: actual CPU consumed; immune to
+  *             waiting-for-a-core, inflates only for real extra work
+  *   gc      — jvmGCTime: stop-the-world time attributed to the task
+  * run up + cpu flat = the host, not the code.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** The session every measurement main shares. */
+  private[graft] def session(cpus: Int): SparkSession = {
     val spark = GraftSession
       .configure(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sc = spark.sparkContext
+    spark
+  }
 
-    // ---- task-metric attribution: stage -> job group -> busy ms ----
-    // THREE time bases per group (the r16 driver-run adjudication):
-    //   run  — executorRunTime (+deser +result-ser): task WALL on the
-    //          executor thread; inflates under host CPU steal/IO stall
-    //   cpu  — executorCpuTime: actual CPU consumed; immune to
-    //          waiting-for-a-core, inflates only for real extra work
-    //          (or interpreted execution)
-    //   gc   — jvmGCTime: stop-the-world time attributed to the task
-    // compute (run-based) stays the headline for continuity with
-    // BASELINE.md and rounds 1–16; cpu/gc columns let a divergent run
-    // adjudicate ITSELF: run up + cpu flat = the host, not the code.
-    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val groupMs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val groupCpuNs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val groupGcMs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    val taskN = new java.util.concurrent.atomic.AtomicLong()
-    def bump(m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong],
-        g: String, v: Long): Unit =
-      m.computeIfAbsent(g, _ => new java.util.concurrent.atomic.AtomicLong())
-        .addAndGet(v): Unit
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val group = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")
-        if (group.nonEmpty)
-          j.stageIds.foreach(id => stageGroup.put(id, group): Unit)
-        ()
-      }
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        taskN.incrementAndGet()
-        val m = t.taskMetrics
-        val g = stageGroup.get(t.stageId)
-        if (m != null && g != null) {
-          bump(groupMs, g, m.executorRunTime + m.executorDeserializeTime +
-            m.resultSerializationTime)
-          bump(groupCpuNs, g, m.executorCpuTime)
-          bump(groupGcMs, g, m.jvmGCTime)
-        }
-        ()
-      }
-    })
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  /** Pays every one-time cost outside the timed loop: JVM/codegen,
+    * the fixture span tables and the multi-file table layouts.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     // Warm the JVM/codegen path once so per-query numbers measure the
     // engine, not first-query classloading.
     SparkEntry.entry(spark).count()
@@ -105,13 +76,54 @@ object Bench {
             df.columns.toIndexedSeq.map(df.col): _*))).collect()
         ()
       }
+  }
+
+  private def r3(v: Double): String = f"$v%.3f"
+
+  /** The LAST stdout line, read by machine: ONE compact JSON
+    * summary that must survive, whole, inside a 2000-char stdout tail.
+    * Fixed fields first, then as many per-query entries as fit a fixed
+    * byte budget, heaviest queries first (the entries are the parsed
+    * per-query table; the full per-query map lives in the artifact).
+    */
+  private[graft] def summaryLine(results: Seq[(String, Double)],
+      compute: Seq[(String, Double)], p1total: Double, cpuTotal: Double,
+      gcTotal: Double, cpus: Int, sfDir: String, fullName: String): String = {
+    val total = results.map(_._2).sum
+    val sorted = results.map(_._2).sorted
+    val mean = if (results.isEmpty) 0.0 else total / results.size
+    val median = if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
+    val computeTotal = compute.map(_._2).sum
+    val computeMean = if (compute.isEmpty) 0.0 else computeTotal / compute.size
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","regime":"steady-state (median of 3)","n":${results.size},"mean":${r3(mean)},"median":${r3(median)},"pass1_total":${r3(p1total)},"compute_total":${r3(computeTotal)},"compute_mean":${r3(computeMean)},"cpu_total":${r3(cpuTotal)},"gc_total":${r3(gcTotal)},"note":"compute = task-time/$cpus; wall-compute = local job-dispatch floor; compute_mean compares to the 0.112s/query anchor","queries":"""
+    val tail = s""","queries_file":"$fullName","sf":"$sfDir"}"""
+    val budget = 1800 - head.length - tail.length - 2 // braces
+    val picked = new scala.collection.mutable.ArrayBuffer[String]()
+    var used = 0
+    results.sortBy(-_._2).iterator
+      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
+      .takeWhile { e =>
+        val sep = if (picked.isEmpty) 0 else 1
+        val fits = used + sep + e.length <= budget
+        if (fits) { used += sep + e.length; picked += e }
+        fits
+      }.foreach(_ => ())
+    head + picked.mkString("{", ",", "}") + tail
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = session(cpus)
+    val sc = spark.sparkContext
+    warmUp(spark, sfDir)
     // q.bench=false entries stay in the Verify gate but out of the
     // timed loop (e.g. the iterative BPE trainer: K driver-coordinated
     // jobs by design — its cost is K job floors, not engine speed)
     def pass(tag: String): Seq[(String, Double)] =
       graft.queries.Registry.all.filter(_.bench)
         .sortBy(_.name).map { q =>
-        sc.setJobGroup(s"$tag:${q.name}", q.name)
+        val group = s"$tag:${q.name}"
+        TaskLedger.begin(sc, group)
+        sc.setJobGroup(group, q.name)
         val t0 = System.nanoTime()
         try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
@@ -137,31 +149,28 @@ object Bench {
       System.gc()
       pass(tag)
     }
-    // the listener bus is async: wait until the task count stops moving
-    // before reading the attribution map (one drain total, not per query)
-    var prev = -1L
-    while (prev != taskN.get()) { prev = taskN.get(); Thread.sleep(200) }
-    def med3(a: Double, b: Double, c: Double): Double =
-      Seq(a, b, c).sorted.apply(1)
+    // one bus drain for the whole run, then every group's totals
+    TaskLedger.drain(60000L): Unit
     val names = pass1.map(_._1)
+    val ledger = (("p1" +: steadyTags).flatMap(tag => names.map(k => s"$tag:$k"))
+      .flatMap(g => TaskLedger.take(g).map(g -> _))).toMap
+    def med3(xs: Seq[Double]): Double = xs.sorted.apply(1)
     val byName = steady.map(_.toMap)
-    val results = names.map { k =>
-      k -> med3(byName(0)(k), byName(1)(k), byName(2)(k))
-    }
-    def med3Of(m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong],
-        k: String, unitDiv: Double): Double = {
-      val samples = steadyTags.map { tag =>
-        Option(m.get(s"$tag:$k")).fold(0.0)(_.get() / unitDiv / cpus)
-      }
-      med3(samples(0), samples(1), samples(2))
-    }
-    val compute = names.map(k => k -> med3Of(groupMs, k, 1000.0))
-    val cpu = names.map(k => k -> med3Of(groupCpuNs, k, 1e9))
-    val gc = names.map(k => k -> med3Of(groupGcMs, k, 1000.0))
+    val results = names.map(k => k -> med3(byName.map(_(k))))
+    // per-pass, per-query task totals in seconds per core
+    def perCore(f: TaskLedger.Group => Double)(tag: String, k: String): Double =
+      ledger.get(s"$tag:$k").fold(0.0)(f) / cpus
+    val runS = perCore(_.runMs / 1000.0) _
+    val cpuS = perCore(_.cpuNs / 1e9) _
+    val gcS = perCore(_.gcMs / 1000.0) _
+    def steadyMed(f: (String, String) => Double): Seq[(String, Double)] =
+      names.map(k => k -> med3(steadyTags.map(f(_, k))))
+    val compute = steadyMed(runS)
+    val cpu = steadyMed(cpuS)
+    val gc = steadyMed(gcS)
     def jmap(xs: Seq[(String, Double)]): String =
       xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jmap(results)
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = results.map(_._2).sum
     val p1total = pass1.map(_._2).sum
     val computeTotal = compute.map(_._2).sum
     val cpuTotal = cpu.map(_._2).sum
@@ -172,22 +181,16 @@ object Bench {
     // Per-pass compute/cpu next to the per-pass wall: the r18 driver
     // adjudication rule reads per-pass columns FIRST (a pass whose
     // total is inflated, or slow samples coinciding with slow
-    // neighbors inside one pass, is a host window) — wall alone could
-    // not adjudicate a query elevated in all three passes (r18's
-    // pipe_bpe_encode); with compute and cpu per pass the artifact
-    // self-adjudicates: compute up with cpu flat = steal/IO, both up
-    // in one pass only = contention window, both up in all passes =
-    // real work or a serialized kernel.
-    def perPass(m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong],
-        unitDiv: Double): String =
+    // neighbors inside one pass, is a host window) — with compute and
+    // cpu per pass the artifact self-adjudicates: compute up with cpu
+    // flat = steal/IO, both up in one pass only = contention window,
+    // both up in all passes = real work or a serialized kernel.
+    def perPass(f: (String, String) => Double): String =
       steadyTags.map { tag =>
-        "\"" + tag + "\":" + jmap(names.map(k =>
-          k -> Option(m.get(s"$tag:$k")).fold(0.0)(_.get() / unitDiv / cpus)))
+        "\"" + tag + "\":" + jmap(names.map(k => k -> f(tag, k)))
       }.mkString("{", ",", "}")
-    val steadyCompute = perPass(groupMs, 1000.0)
-    val steadyCpu = perPass(groupCpuNs, 1e9)
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","regime":"steady-state (median of 3 passes, cache/GC hygiene between)","pass1_total":$p1total,"compute_total":$computeTotal,"cpu_total":$cpuTotal,"gc_total":$gcTotal,"queries":$qs,"compute":${jmap(compute)},"cpu":${jmap(cpu)},"gc":${jmap(gc)},"pass1_queries":${jmap(pass1)},"steady_passes":$rawSteady,"steady_compute":$steadyCompute,"steady_cpu":$steadyCpu,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","regime":"steady-state (median of 3 passes, cache/GC hygiene between)","pass1_total":$p1total,"compute_total":$computeTotal,"cpu_total":$cpuTotal,"gc_total":$gcTotal,"queries":${jmap(results)},"compute":${jmap(compute)},"cpu":${jmap(cpu)},"gc":${jmap(gc)},"pass1_queries":${jmap(pass1)},"steady_passes":$rawSteady,"steady_compute":${perPass(runS)},"steady_cpu":${perPass(cpuS)},"sf":"$sfDir"}"""
     // The full per-query/per-pass artifact goes ONLY to files (a 7 KB
     // JSON line on stdout ahead of the summary defeated the driver's
     // 2000-char tail parse in r18/r19): per-run name keyed by core
@@ -201,32 +204,8 @@ object Bench {
         ()
       } catch { case _: Throwable => () }
     }
-    val sorted = results.map(_._2).sorted
-    val mean = if (results.isEmpty) 0.0 else total / results.size
-    val median = if (sorted.isEmpty) 0.0 else sorted(sorted.size / 2)
-    val computeMean = if (compute.isEmpty) 0.0 else computeTotal / compute.size
-    def r3(v: Double): String = f"$v%.3f"
-    // The LAST stdout line is the driver contract: ONE compact JSON
-    // summary that must survive, whole, inside a 2000-char stdout tail
-    // that also carries the [info] prefix and sbt's trailing [success]
-    // line. Fixed fields first, then as many per-query entries as fit
-    // a fixed byte budget, heaviest queries first (the entries are the
-    // driver's per-query table; the full 260-query map lives in the
-    // artifact files above).
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","regime":"steady-state (median of 3)","n":${results.size},"mean":${r3(mean)},"median":${r3(median)},"pass1_total":${r3(p1total)},"compute_total":${r3(computeTotal)},"compute_mean":${r3(computeMean)},"cpu_total":${r3(cpuTotal)},"gc_total":${r3(gcTotal)},"note":"compute = task-time/$cpus; wall-compute = local job-dispatch floor; compute_mean compares to the 0.112s/query anchor","queries":"""
-    val tail = s""","queries_file":"$fullName","sf":"$sfDir"}"""
-    val budget = 1800 - head.length - tail.length - 2 // braces
-    val picked = new scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    results.sortBy(-_._2).iterator
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .takeWhile { e =>
-        val sep = if (picked.isEmpty) 0 else 1
-        val fits = used + sep + e.length <= budget
-        if (fits) { used += sep + e.length; picked += e }
-        fits
-      }.foreach(_ => ())
-    println(head + picked.mkString("{", ",", "}") + tail)
+    println(summaryLine(results, compute, p1total, cpuTotal, gcTotal,
+      cpus, sfDir, fullName))
     spark.stop()
   }
 }

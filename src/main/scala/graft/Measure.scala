@@ -1,0 +1,154 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions._
+
+import graft.obs.TaskLedger
+
+/** The measurement CLI: [[Bench]]'s session setup and fixture warm-up,
+  * task metrics from the [[graft.obs.TaskLedger]], three modes
+  * (SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS as for Bench):
+  *
+  *   sbt "runMain graft.Measure decomp [stride] [name1,name2]"
+  *   sbt "runMain graft.Measure floor"
+  *   sbt "runMain graft.Measure plans <outDir> <suffix> name1,name2"
+  *
+  * decomp — every `stride`-th query by name (default 10), or those whose
+  *   name contains one of the substrings: a cold run (`first`), then
+  *   three runs split into BUILD (the DataFrame), PLAN (analysis,
+  *   optimization and physical planning via `executedPlan`, no job) and
+  *   EXEC (the count()); the median run by wall prints with compute =
+  *   Σ task time / cores, cpu, gc, floor = wall − compute (scheduling,
+  *   task launch, inter-job turnaround), jobs and stages.
+  * floor  — first and warm-median wall of no-IO jobs, a shuffle, parquet
+  *   scans and one small LogQL query: the fixed machinery under a query.
+  * plans  — each named query's `.explain("formatted")` into
+  *   `<outDir>/<name><suffix>.txt` (the `plans/<round>/` evidence files).
+  */
+object Measure {
+
+  private def time(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
+    val modes: Map[String, (SparkSession, String, Seq[String]) => Unit] =
+      Map("decomp" -> decomp, "floor" -> floor, "plans" -> plans)
+    require(modes.contains(mode),
+      s"usage: graft.Measure ${modes.keys.toSeq.sorted.mkString("|")} [args]")
+    val spark = Bench.session(Bench.cpus)
+    try {
+      Bench.warmUp(spark, Bench.sfDir)
+      modes(mode)(spark, Bench.sfDir, args.toSeq.tail)
+    } finally spark.stop()
+  }
+
+  private def decomp(spark: SparkSession, sfDir: String,
+      args: Seq[String]): Unit = {
+    val sc = spark.sparkContext
+    val cores = Bench.cpus
+    val stride = args.headOption.map(_.toInt).getOrElse(10)
+    val nameFilter = args.lift(1).map(_.split(',').toSeq)
+    val sample = graft.queries.Registry.all.filter(_.bench)
+      .sortBy(_.name).zipWithIndex
+      .filter { case (q, i) =>
+        nameFilter match {
+          case Some(subs) => subs.exists(q.name.contains)
+          case None       => i % stride == 0
+        }
+      }.map(_._1)
+    var wallSum = 0.0
+    var computeSum = 0.0
+    sample.foreach { q =>
+      try {
+        // cold run pays fixture build, codegen and plan caches once
+        val first = time(q.run(spark, sfDir).count())
+        val runs = (1 to 3).map { i =>
+          val group = s"decomp:${q.name}:$i"
+          TaskLedger.begin(sc, group)
+          sc.setJobGroup(group, q.name)
+          try {
+            var df: DataFrame = null
+            val build = time { df = q.run(spark, sfDir) }
+            val plan = time { df.queryExecution.executedPlan; () }
+            val exec = time { df.count(); () }
+            (group, build, plan, exec)
+          } finally sc.clearJobGroup()
+        }
+        TaskLedger.drain(10000L): Unit
+        val taken = runs.map(r => r -> TaskLedger.take(r._1).get)
+        val ((_, build, plan, exec), g) =
+          taken.sortBy { case (r, _) => r._2 + r._3 + r._4 }.apply(1)
+        val wall = build + plan + exec
+        val compute = g.runMs / 1000.0 / cores
+        val cpu = g.cpuNs / 1e9 / cores
+        val gc = g.gcMs / 1000.0 / cores
+        wallSum += wall
+        computeSum += compute
+        println(f"[decomp] ${q.name}%-36s first=$first%.3f " +
+          f"build=$build%.3f plan=$plan%.3f exec=$exec%.3f wall=$wall%.3f " +
+          f"compute=$compute%.3f cpu=$cpu%.3f gc=$gc%.3f " +
+          f"floor=${wall - compute}%.3f (${100 * (wall - compute) / wall}%.0f%%) " +
+          f"jobs=${g.jobs.size}%2d stages=${g.stages.size}%2d")
+      } catch { case e: Throwable =>
+        println(s"[decomp] ${q.name} failed: ${e.getMessage}")
+      }
+    }
+    println(f"[decomp] TOTAL sample=${sample.size} wall=$wallSum%.1f s " +
+      f"ideal-parallel-compute=$computeSum%.1f s " +
+      f"scheduling/coordination floor=${wallSum - computeSum}%.1f s " +
+      f"(${100 * (wallSum - computeSum) / wallSum}%.0f%% of wall)")
+  }
+
+  private def floor(spark: SparkSession, sfDir: String,
+      args: Seq[String]): Unit = {
+    def probe(name: String, n: Int = 6)(f: => Unit): Unit = {
+      val ts = (1 to n).map(_ => time(f))
+      val warm = ts.tail.sorted.apply((n - 1) / 2)
+      println(f"[floor] $name first=${ts.head}%.3f warm=$warm%.3f")
+    }
+    // pure scheduling floor: one job, one task, no IO
+    probe("1-task no-IO job")(spark.range(1).count(): Unit)
+    // full-width scan stage, no shuffle: task-launch cost at full width
+    val width = Bench.cpus
+    probe(s"$width-task no-IO job")(
+      spark.range(0, 1L << 22, 1, width).count(): Unit)
+    // one full-width exchange on top: the minimal shuffle round-trip
+    probe(s"$width-task + 1 shuffle") {
+      spark.range(0, 1L << 22, 1, width).toDF("i")
+        .groupBy((col("i") % 7).as("k")).count().count(): Unit
+    }
+    // parquet: listing + footer on first touch, then the cached scan
+    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    probe("parquet count")(ev.count(): Unit)
+    probe("parquet 1-col agg")(
+      ev.agg(sum(length(col("props")))).collect(): Unit)
+    // a representative small engine query end-to-end (parse + plan +
+    // one grouped scan), the shape of the bench median
+    probe("logql count_over_time") {
+      graft.logql.Planner.query(
+        """count_over_time({event_type=~".+"} [1d])""",
+        graft.sources.Testdata(spark, sfDir).events
+          .select(col("ts").as("ts_ns"), col("props").as("body"),
+            map(lit("event_type"), col("event_type")).as("labels")))
+        .count(): Unit
+    }
+  }
+
+  private def plans(spark: SparkSession, sfDir: String,
+      args: Seq[String]): Unit = {
+    require(args.size == 3, "usage: graft.Measure plans <outDir> <suffix> name1,name2")
+    val Seq(outDir, suffix, names) = args
+    new java.io.File(outDir).mkdirs()
+    names.split(',').foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val f = new java.io.File(outDir, s"$n$suffix.txt")
+      val w = new java.io.PrintWriter(f, "UTF-8")
+      try w.write(p) finally w.close()
+      println(s"[plans] wrote ${f.getPath} (${p.linesIterator.size} lines)")
+    }
+  }
+}

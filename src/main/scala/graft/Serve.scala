@@ -119,25 +119,9 @@ final class Serve(val spark: SparkSession, cfg: Serve.Config) {
         "severity_text STRING, service_name STRING, trace_id_hex STRING, " +
         "attrs MAP<STRING,STRING>, resource_attrs MAP<STRING,STRING>",
       mergeSchema = true)
-    val emptyMap = map().cast("map<string,string>")
-    // a layout written ENTIRELY before the attrs upgrade merges to a
-    // schema without the column at all — normalize to empty maps
-    def mapCol(name: String) =
-      if (stored.columns.contains(name)) coalesce(col(name), emptyMap)
-      else emptyMap
-    val res = mapCol("resource_attrs")
-    val at = mapCol("attrs")
-    // attrs shadow resource attrs on key collision (the more specific
-    // scope wins); the materialized service_name splices in last —
-    // always present (enrichLogs coalesces to "unknown_service", the
-    // reference's logstorage.DefaultServiceName)
-    val base = map_concat(
-      map_filter(res, (k, _) => !map_contains_key(at, k)), at)
-    val labels = map_concat(
-      map_filter(base, (k, _) => k =!= "service_name"),
-      map(lit("service_name"),
-        coalesce(col("service_name"), lit("unknown_service"))))
-    stored.select(col("ts_ns"), col("body"), labels.as("labels"),
+    // the same stream labels the log-volume sidecar keys on
+    stored.select(col("ts_ns"), col("body"),
+      graft.streaming.Streams.storedLogLabels(stored.columns.toSeq).as("labels"),
       col("severity_number"), col("severity_text"), col("service_name"),
       col("trace_id_hex"))
   }

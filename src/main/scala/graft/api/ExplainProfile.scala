@@ -1,7 +1,6 @@
 package graft.api
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.LongAdder
+import graft.obs.TaskLedger
 
 /** Per-request EXPLAIN ANALYZE — the reference's `httpmiddleware
   * .Explain()` (internal/httpmiddleware/explain.go:14-55): a request
@@ -16,19 +15,17 @@ import java.util.concurrent.atomic.LongAdder
   * request ALREADY runs under its own Spark job group (the execution
   * -cap machinery), so the profile is the request's job → stage tree
   * with per-stage task metrics (task time, input bytes/rows, shuffle
-  * read/write, spill) accumulated by a SparkListener keyed off the
-  * group — the same per-operator timing story, told in Spark's own
-  * execution units. Rendered as ONE JSON line through the request-log
-  * sink.
+  * read/write, spill) read from the [[graft.obs.TaskLedger]] entry of
+  * that group — the same per-operator timing story, told in Spark's
+  * own execution units. Rendered as ONE JSON line through the
+  * request-log sink.
   *
   * Zero-overhead contract (the reference's explain.go:24-27 claim,
-  * kept): the listener is installed lazily at the FIRST profiled
-  * request in the JVM's lifetime; un-profiled requests never touch
-  * this object. Once installed, the per-task cost for other traffic is
-  * one ConcurrentHashMap miss — only stages of profiled groups
-  * accumulate. A cache-served profiled request renders `"jobs":[]`,
-  * which is itself the answer an operator is usually after ("did this
-  * refresh run Spark work at all?").
+  * kept): only a profiled request registers its group, and the ledger
+  * installs its listener at the first registration; un-profiled
+  * requests never touch it. A cache-served profiled request renders
+  * `"jobs":[]`, which is itself the answer an operator is usually
+  * after ("did this refresh run Spark work at all?").
   */
 object ExplainProfile {
 
@@ -43,112 +40,27 @@ object ExplainProfile {
     case _                                 => true
   })
 
-  private final class StageProf {
-    val tasks = new LongAdder
-    val timeMs = new LongAdder
-    val inputBytes = new LongAdder
-    val inputRows = new LongAdder
-    val shuffleReadBytes = new LongAdder
-    val shuffleWriteBytes = new LongAdder
-    val spillBytes = new LongAdder
-  }
-  private final class GroupProf {
-    // insertion-ordered job -> stage ids (driver-side, tiny)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[Int])]
-    val stages = new ConcurrentHashMap[Int, StageProf]()
-  }
-
-  private val groups = new ConcurrentHashMap[String, GroupProf]()
-  private val stageToGroup = new ConcurrentHashMap[Int, GroupProf]()
-  @volatile private var installed = false
-  // context captured at install — render() drains its listener bus so
-  // asynchronously-delivered job/task events land before reading
-  @volatile private var scRef: org.apache.spark.SparkContext = _
-
-  /** Registry occupancy (groups, stage registrations) — lifecycle
-    * tests assert both drain to zero after render/release.
-    */
-  private[graft] def registrySize: (Int, Int) =
-    (groups.size, stageToGroup.size)
-
-  /** Lazily installs the ONE listener (idempotent, JVM-wide). */
-  private def install(sc: org.apache.spark.SparkContext): Unit =
-    if (!installed) synchronized {
-      if (!installed) {
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val gid = Option(e.properties)
-              .map(_.getProperty("spark.jobGroup.id")).orNull
-            val g = if (gid == null) null else groups.get(gid)
-            if (g != null) {
-              val stageIds = e.stageInfos.map(_.stageId)
-              g.jobs.add((e.jobId, stageIds)): Unit
-              stageIds.foreach { sid =>
-                stageToGroup.put(sid, g)
-                g.stages.putIfAbsent(sid, new StageProf): Unit
-              }
-              // release() may have swept g.stages BETWEEN the get above
-              // and these puts — its keySet walk then missed the fresh
-              // stage ids, leaking them in stageToGroup forever. After
-              // all puts are visible, re-check membership: whichever of
-              // this re-check / release's sweep runs second sees the
-              // complete picture, and remove(sid, g) is idempotent and
-              // never clobbers a later group that reused a stage id.
-              if (groups.get(gid) ne g)
-                stageIds.foreach(sid => stageToGroup.remove(sid, g): Unit)
-            }
-          }
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val g = stageToGroup.get(e.stageId)
-            if (g != null) {
-              val sp = g.stages.get(e.stageId)
-              val m = e.taskMetrics
-              if (sp != null && m != null) {
-                sp.tasks.increment()
-                sp.timeMs.add(m.executorRunTime +
-                  m.executorDeserializeTime + m.resultSerializationTime)
-                sp.inputBytes.add(m.inputMetrics.bytesRead)
-                sp.inputRows.add(m.inputMetrics.recordsRead)
-                sp.shuffleReadBytes.add(m.shuffleReadMetrics.totalBytesRead)
-                sp.shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
-                sp.spillBytes.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-              }
-            }
-          }
-        })
-        installed = true
-      }
-    }
-
   /** Starts profiling the job group (call before the handler runs). */
-  def begin(sc: org.apache.spark.SparkContext, groupId: String): Unit = {
-    install(sc)
-    scRef = sc
-    groups.put(groupId, new GroupProf): Unit
-  }
+  def begin(sc: org.apache.spark.SparkContext, groupId: String): Unit =
+    TaskLedger.begin(sc, groupId)
 
   /** Releases a group's registrations without rendering — the error
     * -path twin of [[render]] (idempotent after a successful render).
     */
-  def release(groupId: String): Unit = {
-    val g = groups.remove(groupId)
-    if (g != null) g.stages.keySet.forEach(sid => { stageToGroup.remove(sid); () })
-  }
+  def release(groupId: String): Unit = TaskLedger.release(groupId)
 
   /** Renders the group's profile as one JSON line and releases every
     * registration (call after the handler finished, even on error).
     * None when [[begin]] was never called for the group.
     *
-    * Listener events arrive ASYNCHRONOUSLY on the bus, so the bus is
-    * drained (bounded) before reading — without it a short request's
-    * profile could render `"jobs":[]` while its job-start event was
-    * still queued. Jobs whose start event lands AFTER the group is
-    * released here are deliberately uncounted: the request is over, and
-    * a cap-killed request's final stage belongs to the cancellation,
-    * not the answer (mirrors the reference dropping collector output
-    * once the request context is done, explain.go:30-43).
+    * The bus is drained (bounded) before reading — without it a short
+    * request's profile could render `"jobs":[]` while its job-start
+    * event was still queued. Jobs whose start event lands AFTER the
+    * group is released here are deliberately uncounted: the request is
+    * over, and a cap-killed request's final stage belongs to the
+    * cancellation, not the answer (mirrors the reference dropping
+    * collector output once the request context is done,
+    * explain.go:30-43).
     */
   def render(groupId: String, method: String, path: String,
       wallMs: Double, status: Int): Option[String] = {
@@ -156,37 +68,28 @@ object ExplainProfile {
     // ingest load (ProcessingTime(0) triggers) may never empty — the
     // profiled request pays the bound while holding its query slot, so
     // the cap trades worst-case profile completeness for not letting a
-    // handful of profiled requests shed ordinary traffic. Unprofiled
-    // traffic never reaches this line (zero-overhead contract intact).
-    val sc = scRef
-    if (sc != null && groups.containsKey(groupId))
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc, 1000L): Unit
-    val g = groups.remove(groupId)
-    if (g == null) return None
-    val jobs = new scala.collection.mutable.ArrayBuffer[String]
-    g.jobs.forEach { case (jobId, stageIds) =>
-      val stages = stageIds.sorted.flatMap { sid =>
-        Option(g.stages.get(sid)).map { sp =>
-          s"""{"stage":$sid,"tasks":${sp.tasks.sum()},""" +
-            s""""task_time_ms":${sp.timeMs.sum()},""" +
-            s""""input_bytes":${sp.inputBytes.sum()},""" +
-            s""""input_rows":${sp.inputRows.sum()},""" +
-            s""""shuffle_read_bytes":${sp.shuffleReadBytes.sum()},""" +
-            s""""shuffle_write_bytes":${sp.shuffleWriteBytes.sum()},""" +
-            s""""spill_bytes":${sp.spillBytes.sum()}}"""
+    // handful of profiled requests shed ordinary traffic.
+    TaskLedger.drain(1000L): Unit
+    TaskLedger.take(groupId).map { g =>
+      val jobs = g.jobs.map { case (jobId, stageIds) =>
+        val stages = stageIds.sorted.flatMap { sid =>
+          g.stages.get(sid).map { sp =>
+            s"""{"stage":$sid,"tasks":${sp.tasks.sum()},""" +
+              s""""task_time_ms":${sp.runMs.sum()},""" +
+              s""""input_bytes":${sp.inputBytes.sum()},""" +
+              s""""input_rows":${sp.inputRows.sum()},""" +
+              s""""shuffle_read_bytes":${sp.shuffleReadBytes.sum()},""" +
+              s""""shuffle_write_bytes":${sp.shuffleWriteBytes.sum()},""" +
+              s""""spill_bytes":${sp.spillBytes.sum()}}"""
+          }
         }
+        s"""{"job":$jobId,"stages":[${stages.mkString(",")}]}"""
       }
-      jobs += s"""{"job":$jobId,"stages":[${stages.mkString(",")}]}"""
+      val j = ApiEncoders.jsonString _
+      s"""{"event":"explain_analyze","method":${j(method)},""" +
+        s""""path":${j(path)},"status":$status,""" +
+        s""""wall_ms":${"%.3f".formatLocal(java.util.Locale.ROOT, wallMs)},""" +
+        s""""task_time_ms":${g.runMs},"jobs":[${jobs.mkString(",")}]}"""
     }
-    // release the stage registrations this group owned
-    g.stages.keySet.forEach(sid => { stageToGroup.remove(sid); () })
-    val j = ApiEncoders.jsonString _
-    val taskTime = {
-      var t = 0L; g.stages.values.forEach(sp => t += sp.timeMs.sum()); t
-    }
-    Some(s"""{"event":"explain_analyze","method":${j(method)},""" +
-      s""""path":${j(path)},"status":$status,""" +
-      s""""wall_ms":${"%.3f".formatLocal(java.util.Locale.ROOT, wallMs)},""" +
-      s""""task_time_ms":$taskTime,"jobs":[${jobs.mkString(",")}]}""")
   }
 }

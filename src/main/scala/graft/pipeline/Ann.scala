@@ -34,22 +34,23 @@ object Ann {
   private def cos6(a: Column, b: Column): Column =
     round(graft.functions.GraftFunctions.cosine_sim(a, b), 6)
 
-  /** In-row argmax over a scored candidate list: the element with max
-    * round-6 cosine, ties → lowest rid — the exact total order
-    * `max_by(rid, struct(g_c, -rid))` ranked by, as a fold (the order
-    * is total on distinct rids, so the fold result is independent of
-    * list order). The argmax runs where the row already is: no
-    * candidate fan-out rows, no groupBy Exchange (an AQE job per
-    * assignment level), and no SortAggregate demotion from the
-    * struct/array aggregation buffers the r19 audit flagged (r20).
+  /** In-row argmax over a list of (`id`, `c`) structs: the `id` of the
+    * element with max score `c`, ties → lowest id — the exact total
+    * order `max_by(id, struct(c, -id))` ranked by, as a fold. Spark
+    * orders NaN above every number and equal to itself, so the order
+    * stays total with NaN scores (a NaN wins, lowest id among NaNs) and
+    * the result is independent of list order. The argmax runs where
+    * the row already is: no candidate fan-out rows, no groupBy Exchange
+    * (an AQE job per assignment level), and no SortAggregate demotion
+    * from the struct/array aggregation buffers the r19 audit flagged.
     */
-  private def argmaxRid(scored: Column): Column =
+  private[graft] def argmaxBy(scored: Column, id: String): Column =
     aggregate(scored, element_at(scored, 1),
       (acc, x) => when(
         x.getField("c") > acc.getField("c") ||
           (x.getField("c") === acc.getField("c") &&
-            x.getField("rid") < acc.getField("rid")), x).otherwise(acc),
-      acc => acc.getField("rid"))
+            x.getField(id) < acc.getField(id)), x).otherwise(acc),
+      acc => acc.getField(id))
 
   private def scoredAgainst(vecCol: String): Column =
     transform(col("__refs"), r => struct(
@@ -67,7 +68,7 @@ object Ann {
     df.crossJoin(broadcast(
         refs.agg(collect_list(struct(col("rid"), col("rv"))).as("__refs"))))
       .withColumn("__scored", scoredAgainst(vecCol))
-      .withColumn(outCol, argmaxRid(col("__scored")))
+      .withColumn(outCol, argmaxBy(col("__scored"), "rid"))
       .drop("__refs", "__scored")
 
   /** Two-level coarse assignment: returns `vecs` plus a `cid` column
@@ -104,7 +105,7 @@ object Ann {
     vecsS
       .join(broadcast(bucketed), Seq("sid"))
       .withColumn("__scored", scoredAgainst(vecCol))
-      .withColumn("cid", argmaxRid(col("__scored")))
+      .withColumn("cid", argmaxBy(col("__scored"), "rid"))
       .drop("sid", "__refs", "__scored")
   }
 

@@ -1451,6 +1451,36 @@ object PromQL {
     "sum" -> "count_over_time",
     "min" -> "min_over_time", "max" -> "max_over_time")
 
+  /** The selected samples with their window bucket(s) as `bucket_us`:
+    * with a step, one row per step-aligned window END t with
+    * ts ≤ t < ts + range (the step fan-out; sliding windows are
+    * labeled by their end); without, the tumbling range bucket. The
+    * offset shifts the working timestamps forward so every bucket
+    * boundary check downstream stays offset-free (same trick as the
+    * reference's point_offset_ns, chsql_stepfanout.go).
+    */
+  private def windowBuckets(points: DataFrame, sel: Selector, rangeUs: Long,
+      offsetUs: Long, stepUs: Option[Long]): DataFrame = {
+    val src =
+      if (offsetUs == 0) points
+      else points.withColumn("ts_us", col("ts_us") + lit(offsetUs))
+    stepUs match {
+      case Some(st) =>
+        val nSteps = rangeUs / st + 1
+        src.filter(selCol(sel))
+          .withColumn("__first_step",
+            expr(s"((ts_us + ${st - 1}) div $st) * $st"))
+          .withColumn("bucket_us", explode(filter(
+            sequence(col("__first_step"),
+              col("__first_step") + lit((nSteps - 1) * st), lit(st)),
+            s => s < col("ts_us") + lit(rangeUs))))
+          .drop("__first_step")
+      case None =>
+        src.filter(selCol(sel))
+          .withColumn("bucket_us", col("ts_us") - col("ts_us") % lit(rangeUs))
+    }
+  }
+
   /** The plan builder, with the structural recursion (agg / binop /
     * function / histogram_quantile nodes) routed through `rec` — the
     * range path recurses into itself, the instant path ([[evalInstant]])
@@ -1469,26 +1499,8 @@ object PromQL {
     // disappear; values and rows are bit-identical, see fusedAggRange)
     case Agg(op, by, without, _, _, RangeFn(rfn, sel, rangeNs, offsetNs, _))
         if fuseRange && fusedAggRange(op -> rfn) =>
-      val rangeUs = rangeNs / 1000
-      val offsetUs = offsetNs / 1000
-      val src =
-        if (offsetUs == 0) points
-        else points.withColumn("ts_us", col("ts_us") + lit(offsetUs))
-      val bucketed = stepUs match {
-        case Some(st) =>
-          val nSteps = rangeUs / st + 1
-          src.filter(selCol(sel))
-            .withColumn("__first_step",
-              expr(s"((ts_us + ${st - 1}) div $st) * $st"))
-            .withColumn("bucket_us", explode(filter(
-              sequence(col("__first_step"),
-                col("__first_step") + lit((nSteps - 1) * st), lit(st)),
-              s => s < col("ts_us") + lit(rangeUs))))
-            .drop("__first_step")
-        case None =>
-          src.filter(selCol(sel))
-            .withColumn("bucket_us", col("ts_us") - col("ts_us") % lit(rangeUs))
-      }
+      val bucketed = windowBuckets(points, sel, rangeNs / 1000,
+        offsetNs / 1000, stepUs)
       val grouped =
         if (by.nonEmpty) {
           val byArr = array(by.map(lit): _*)
@@ -1531,30 +1543,8 @@ object PromQL {
 
     case RangeFn(fn, sel, rangeNs, offsetNs, param) =>
       val rangeUs = rangeNs / 1000
-      val offsetUs = offsetNs / 1000
-      // offset shifts the working timestamps forward so every bucket
-      // boundary check downstream stays offset-free (same trick as the
-      // reference's point_offset_ns, chsql_stepfanout.go)
-      val src =
-        if (offsetUs == 0) points
-        else points.withColumn("ts_us", col("ts_us") + lit(offsetUs))
-      // sliding buckets are labeled by window END; extrapolation math
-      // needs the window START, so carry it alongside
-      val bucketed = stepUs match {
-        case Some(st) =>
-          val nSteps = rangeUs / st + 1
-          src.filter(selCol(sel))
-            .withColumn("__first_step",
-              expr(s"((ts_us + ${st - 1}) div $st) * $st"))
-            .withColumn("bucket_us", explode(filter(
-              sequence(col("__first_step"),
-                col("__first_step") + lit((nSteps - 1) * st), lit(st)),
-              s => s < col("ts_us") + lit(rangeUs))))
-            .drop("__first_step")
-        case None =>
-          src.filter(selCol(sel))
-            .withColumn("bucket_us", col("ts_us") - col("ts_us") % lit(rangeUs))
-      }
+      val bucketed = windowBuckets(points, sel, rangeUs, offsetNs / 1000,
+        stepUs)
       // sliding buckets are labeled by window END; the extrapolation
       // math anchors on the window START
       val winStart: Column =

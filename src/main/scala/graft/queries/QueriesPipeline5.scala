@@ -90,13 +90,7 @@ object QueriesPipeline5 extends QueryPack {
         (dot(col("v"), cc.getField("cv")) /
           (sqrt(dot(col("v"), col("v"))) *
             sqrt(dot(cc.getField("cv"), cc.getField("cv"))))).as("c"))))
-      .withColumn("cid",
-        aggregate(col("__scored"), element_at(col("__scored"), 1),
-          (acc, x) => when(
-            x.getField("c") > acc.getField("c") ||
-              (x.getField("c") === acc.getField("c") &&
-                x.getField("cid") < acc.getField("cid")), x).otherwise(acc),
-          acc => acc.getField("cid")))
+      .withColumn("cid", graft.pipeline.Ann.argmaxBy(col("__scored"), "cid"))
       .drop("__cents", "__scored")
     val a = ev.select(col("cid"), col("vec_id").as("keep_id"), col("v").as("va"))
     val b = ev.select(col("cid"), col("vec_id").as("drop_id"), col("v").as("vb"))

@@ -49,6 +49,10 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
   private val logIn = MemoryStream[Array[Byte]]
   private val metricIn = MemoryStream[Array[Byte]]
   private val promIn = MemoryStream[Array[Byte]]
+  // the exemplar sink's own copy of every remote-write payload: a
+  // MemoryStream trims its buffer on commit, so two sinks reading one
+  // stream lose rows whenever the faster sink commits first
+  private val promExIn = MemoryStream[Array[Byte]]
   private val lokiIn = MemoryStream[Array[Byte]]
   private val profileIn = MemoryStream[Array[Byte]]
   private val pyroIn = MemoryStream[(String, Long, Array[Byte])]
@@ -124,11 +128,29 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
       ok
     }
 
-  // primary sink per source: (queryName, sourceIndex) → tracker; each
-  // source's bytes release when ITS batch commits in that sink (promIn
-  // also feeds the exemplar sink and points feed the rollup sidecar,
-  // but one release point per payload keeps the ledger exact)
-  private var trackerByQuery: Map[(String, Int), Admission.InFlightTracker] = Map.empty
+  // (queryName, sourceIndex) → in-flight release for the offsets that
+  // sink committed; each source's bytes release when ITS batch commits
+  // (points feed the rollup sidecar inside the same commit)
+  private var releaseByQuery: Map[(String, Int), Long => Unit] = Map.empty
+
+  // remote-write payloads sit in two streams (points, exemplars) at the
+  // same offsets; their bytes release once BOTH sinks committed them
+  private val promCommitted = Array(-1L, -1L)
+  private def promCommit(sink: Int)(offset: Long): Unit =
+    promCommitted.synchronized {
+      promCommitted(sink) = math.max(promCommitted(sink), offset)
+      promTrk.releaseUpTo(promCommitted.min)
+    }
+
+  /** Appends an admitted payload, returning its offset; remote-write
+    * payloads also go to the exemplar stream, under the same tracker
+    * lock, so the two streams' offsets stay equal.
+    */
+  private def enqueue(sink: MemoryStream[Array[Byte]],
+      payload: Array[Byte]): Long = {
+    if (sink eq promIn) promExIn.addData(Seq(payload))
+    sink.addData(Seq(payload)).json.toLong
+  }
 
   /** resource attrs merged under point attrs, point side winning on
     * duplicate keys (valid OTLP may repeat a key on both levels).
@@ -235,7 +257,8 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
       .select(expr("ts_ns div 1000").as("ts_us"), col("name"),
         mergedLabels.as("labels"), col("gauge").as("value"))
       .unionByName(Streams.pointsFromPrompb(promFrames))
-    val promExemplars = Streams.exemplarsFromPrompb(promFrames)
+    val promExemplars = Streams.exemplarsFromPrompb(
+      promExIn.toDF().withColumnRenamed("value", "payload"))
     // the fourth signal: stack samples for the flame-tree engine
     // (reference oteldbexporter.go:53-80); Pyroscope agent push
     // (collapsed format) shares the profile layout — the reference
@@ -269,7 +292,7 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
       s"$dataDir/exemplars", s"$dataDir/ckpt/promexemplars",
       Trigger.ProcessingTime(0), idBase = exemplarsBase)
     queries = Seq(spansQ, logsQ, pointsQ, exemplarsQ, profilesQ)
-    // built from the NAMED sink vals (like trackerByQuery below) so the
+    // built from the NAMED sink vals (like releaseByQuery below) so the
     // signal attribution can't drift if the `queries` literal reorders —
     // a positional zip would silently misattribute batches and the
     // composition root would serve stale views for the affected signal
@@ -279,11 +302,15 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
     // in-flight release: a completed micro-batch's progress event
     // carries each source's endOffset; every payload enqueued at or
     // below it has been committed by the sink
-    trackerByQuery = Map(
-      (spansQ.id.toString, 0) -> traceTrk,
-      (logsQ.id.toString, 0) -> logTrk, (logsQ.id.toString, 1) -> lokiTrk,
-      (pointsQ.id.toString, 0) -> metricTrk, (pointsQ.id.toString, 1) -> promTrk,
-      (profilesQ.id.toString, 0) -> profileTrk, (profilesQ.id.toString, 1) -> pyroTrk)
+    releaseByQuery = Map(
+      (spansQ.id.toString, 0) -> traceTrk.releaseUpTo _,
+      (logsQ.id.toString, 0) -> logTrk.releaseUpTo _,
+      (logsQ.id.toString, 1) -> lokiTrk.releaseUpTo _,
+      (pointsQ.id.toString, 0) -> metricTrk.releaseUpTo _,
+      (pointsQ.id.toString, 1) -> promCommit(0) _,
+      (exemplarsQ.id.toString, 0) -> promCommit(1) _,
+      (profilesQ.id.toString, 0) -> profileTrk.releaseUpTo _,
+      (profilesQ.id.toString, 1) -> pyroTrk.releaseUpTo _)
     listener = new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -292,9 +319,8 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit =
         e.progress.sources.zipWithIndex.foreach { case (s, i) =>
-          trackerByQuery.get((e.progress.id.toString, i)).foreach { t =>
-            Option(s.endOffset).flatMap(_.toLongOption)
-              .foreach(t.releaseUpTo)
+          releaseByQuery.get((e.progress.id.toString, i)).foreach { release =>
+            Option(s.endOffset).flatMap(_.toLongOption).foreach(release)
           }
         }
     }
@@ -670,7 +696,7 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
           }
           val n = payload.length.toLong
           val admitted =
-            admitPayload(trk, n)(sink.addData(Seq(payload)).json.toLong)
+            admitPayload(trk, n)(enqueue(sink, payload))
           if (admitted)
             // success: an empty ExportXServiceResponse (zero-field
             // protobuf message = zero bytes)

@@ -55,6 +55,29 @@ object Streams {
         coalesce(col("service_name"), lit("unknown_service")))
   }
 
+  /** A stored log row's stream labels, shared by the LogQL serving
+    * view (`graft.Serve`) and the log-volume sidecar: resource attrs
+    * under attrs (the more specific scope wins), then service_name
+    * (the reference's logstorage.DefaultServiceName when absent). A map
+    * column an older layout lacks reads as an empty map.
+    */
+  def storedLogLabels(columns: Seq[String]): Column = {
+    val emptyMap = map().cast("map<string,string>")
+    def mapCol(name: String) =
+      if (columns.contains(name)) coalesce(col(name), emptyMap) else emptyMap
+    val res = mapCol("resource_attrs")
+    val at = mapCol("attrs")
+    val service =
+      if (columns.contains("service_name"))
+        coalesce(col("service_name"), lit("unknown_service"))
+      else lit("unknown_service")
+    map_concat(
+      map_filter(map_concat(
+        map_filter(res, (k, _) => !map_contains_key(at, k)), at),
+        (k, _) => k =!= "service_name"),
+      map(lit("service_name"), service))
+  }
+
   /** Docker json-file envelope detection + unwrap — the FIFTH ingest
     * auto-format (reference internal/dockerlog/: the daemon-stream
     * parser labels each entry with its stream type and timestamps it
@@ -293,13 +316,15 @@ object Streams {
     * reasoning as the planner's `distributiveRange` gate. `bytes` is
     * `sum(length(body))` to mirror the raw metric path's expression
     * exactly. The stream identity is the frame's `labels` map; the
-    * stored ingest layout (no labels column) keys on its `attrs` map —
-    * the same map its LogQL serving view exposes as labels.
+    * stored ingest layout (no labels column) keys on
+    * [[storedLogLabels]] — the map its LogQL serving view exposes as
+    * labels, so tier-served and raw answers carry the same streams.
     */
   def logVolumePartials(batch: DataFrame): DataFrame = {
     val HourNs = 3600000000000L
     val labelsCol =
-      if (batch.columns.contains("labels")) col("labels") else col("attrs")
+      if (batch.columns.contains("labels")) col("labels")
+      else storedLogLabels(batch.columns.toSeq)
     batch
       .withColumn("__labels", labelsCol)
       .withColumn("__s", expr(s"(ts_ns - 1) - (ts_ns - 1) % $HourNs"))

@@ -834,6 +834,81 @@ class EndToEndSpec extends SparkTestBase {
     } finally api.stop()
   }
 
+  test("remote-write: the exemplar sink committing first loses no points") {
+    import graft.sources.{Admission, OtlpReceiver, Snappy}
+    def post(url: String, body: Array[Byte]): Int = {
+      val conn = java.net.URI.create(url).toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      conn.setRequestProperty("Content-Type", "application/x-protobuf")
+      val os = conn.getOutputStream
+      try os.write(body) finally os.close()
+      conn.getResponseCode
+    }
+    def label(n: String, v: String): W = new W().str(1, n).str(2, v)
+    def bits(v: Double): Long = java.lang.Double.doubleToLongBits(v)
+    val t0ms = T0 / 1000000L
+    // one sample and one exemplar per payload, each on its own series
+    def frame(i: Int): Array[Byte] = Snappy.encodeLiteral(new W().msg(1, new W()
+      .msg(1, label("__name__", "rw_order_total"))
+      .msg(1, label("instance", s"i$i"))
+      .msg(2, new W().fix64(1, bits(i.toDouble)).vint(2, t0ms + i * 1000L))
+      .msg(3, new W().msg(1, label("trace_id", f"$i%08x"))
+        .fix64(2, bits(i + 0.5)).vint(3, t0ms + i * 1000L)))
+      .out.toByteArray)
+    val n = 16
+    val dir = Files.createTempDirectory("grafte2erwex").toString
+    // a series budget gives the points sink a lock the test can hold
+    val recv = new OtlpReceiver(spark, dir,
+      limits = Admission.LimitsConfig(maxSeries = 1000L))
+    val rport = recv.start()
+    def sink(signal: String) = recv.sinkSignals.collectFirst {
+      case (id, `signal`) => spark.streams.get(id)
+    }.get
+    val url = s"http://127.0.0.1:$rport/api/v1/write"
+    try {
+      recv.seriesBudget.synchronized {
+        // the points sink takes payload 0 and parks in its series
+        // admission (its batch's offsets are fixed by then)...
+        assert(post(url, frame(0)) == 200)
+        val pointsQ = sink("points")
+        var busySince = 0L
+        val deadline = System.nanoTime() + 30000000000L
+        while ((busySince == 0L || System.nanoTime() - busySince < 500000000L) &&
+            System.nanoTime() < deadline) {
+          val active = pointsQ.status.isTriggerActive && pointsQ.status.isDataAvailable
+          if (!active) busySince = 0L
+          else if (busySince == 0L) busySince = System.nanoTime()
+          Thread.sleep(20)
+        }
+        assert(busySince != 0L, "points sink never picked up payload 0")
+        // ...while the exemplar sink runs two more batches: a source
+        // offset is committed when the NEXT batch starts, so the second
+        // batch commits every payload the points sink has not read yet
+        (1 until n).foreach(i => assert(post(url, frame(i)) == 200))
+        sink("exemplars").processAllAvailable()
+        assert(post(url, frame(n)) == 200)
+        sink("exemplars").processAllAvailable()
+      }
+      recv.flush()
+      // a payload's bytes release once BOTH sinks committed it (the
+      // progress events that carry the commits are asynchronous)
+      val deadline = System.nanoTime() + 10000000000L
+      while (recv.inFlightBytes != 0 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(recv.inFlightBytes == 0L)
+    } finally recv.stop()
+    val points = spark.read.parquet(s"$dir/points")
+      .filter(col("name") === "rw_order_total")
+      .select(col("labels")("instance"), col("value")).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(points == (0 to n).map(i => s"i$i" -> i.toDouble).toMap)
+    val exemplars = spark.read.parquet(s"$dir/exemplars")
+      .select(col("value")).collect().map(_.getDouble(0)).sorted.toSeq
+    assert(exemplars == (0 to n).map(_ + 0.5))
+  }
+
   test("admin storage_maintain pre-merges the cold sidecar partials; answers unchanged") {
     import graft.sources.{OtlpReceiver, Snappy}
     def post(url: String, body: Array[Byte], ct: String,

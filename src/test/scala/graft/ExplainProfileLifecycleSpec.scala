@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import graft.api.ExplainProfile
+import graft.obs.TaskLedger
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Lifecycle edges of the EXPLAIN ANALYZE profiler (VERDICT r16 #5):
@@ -25,7 +26,7 @@ class ExplainProfileLifecycleSpec extends SparkTestBase {
 
   private def drained(): (Int, Int) = {
     Bridge.drainListenerBus(sc, 10000L)
-    ExplainProfile.registrySize
+    TaskLedger.registrySize
   }
 
   test("render waits out the async bus: a real job is never jobs:[]") {
@@ -87,7 +88,7 @@ class ExplainProfileLifecycleSpec extends SparkTestBase {
       assert(done.await(120, TimeUnit.SECONDS), "stress rounds timed out")
       assert(errors.isEmpty, errors)
       assert(drained() == ((0, 0)),
-        s"registries leaked: ${ExplainProfile.registrySize}")
+        s"registries leaked: ${TaskLedger.registrySize}")
     } finally { pool.shutdownNow(): Unit }
   }
 }

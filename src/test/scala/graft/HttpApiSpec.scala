@@ -945,6 +945,25 @@ class HttpApiSpec extends SparkTestBase {
     } finally api.stop()
   }
 
+  test("un-profiled requests register no ledger group and install no task listener") {
+    import graft.obs.TaskLedger
+    val sc = spark.sparkContext
+    val api = new HttpApi(logsDf, pointsDf, spansDf)
+    val port = api.start()
+    // the listener is JVM-wide: another suite's profiled request may
+    // have installed it already — this server must add nothing either way
+    val installedBefore = TaskLedger.installed(sc)
+    val begins = TaskLedger.begins
+    try {
+      // fresh windows: every request runs Spark jobs, none cache-served
+      for (end <- Seq(240, 300, 360))
+        assert(get(s"http://127.0.0.1:$port/api/v1/query_range?query=${
+          enc("cpu")}&start=0&end=$end&step=60")._1 == 200)
+      assert(TaskLedger.begins == begins)
+      assert(TaskLedger.installed(sc) == installedBefore)
+    } finally api.stop()
+  }
+
   test("request metrics record per-route outcomes: 200/400/401/422") {
     import graft.api.{Auth, Limits}
     val api = new HttpApi(logsDf, pointsDf, spansDf,

@@ -280,6 +280,57 @@ class ServeSpec extends SparkTestBase {
     } finally serve2.stop()
   }
 
+  test("log-volume tier and raw path answer a service_name query identically on OTLP logs") {
+    def logAt(svc: String, offNs: Long): Array[Byte] =
+      new W().msg(1, new W()
+        .msg(1, new W().msg(1, kv("service.name", svc)))
+        .msg(2, new W().msg(1, new W().str(1, "logger"))
+          .msg(2, new W().fix64(1, T0 + offNs).vint(2, 9)
+            .msg(5, new W().str(1, s"line from $svc"))
+            .msg(6, kv("app", "vol")))))
+        .out.toByteArray
+    val MinNs = 60000000000L
+    val q = enc("""sum by (service_name) (count_over_time({service_name=~".+"}[1h]))""")
+    val sec12 = T0 / 1000000000L + 7200 // 12:00Z: the window is (11:00, 12:00]
+    def result(port: Int, step: Int): Any = {
+      val (c, body) = get(s"http://127.0.0.1:$port/loki/api/v1/query_range?" +
+        s"query=$q&start=$sec12&end=$sec12&step=$step")
+      assert(c == 200, body)
+      TestJson.parseAll(body).asInstanceOf[Map[String, Any]]("data")
+        .asInstanceOf[Map[String, Any]]("result")
+    }
+    val dir = Files.createTempDirectory("graftservevol").toString
+    val serve = new Serve(spark, Serve.Config(dir))
+    val ports = serve.start()
+    val raw =
+      try {
+        val in = s"http://127.0.0.1:${ports.ingestHttp}/v1/logs"
+        for (m <- Seq(65L, 70L, 80L)) assert(post(in, logAt("api", m * MinNs)) == 200)
+        assert(post(in, logAt("web", 90L * MinNs)) == 200)
+        serve.flush()
+        // a 30-minute step is not a multiple of the 1h tier: raw path
+        result(ports.query, 1800)
+      } finally serve.stop()
+    val counts = raw.asInstanceOf[List[Map[String, Any]]].map { r =>
+      r("metric").asInstanceOf[Map[String, Any]]("service_name") ->
+        r("values").asInstanceOf[List[List[Any]]].map(_(1))
+    }.toMap
+    assert(counts == Map("api" -> List("3.0"), "web" -> List("1.0")), raw)
+    // a deployment holding ONLY the log-volume sidecar answers from the
+    // tier alone (no raw log line exists to fall back to)
+    val dir2 = Files.createTempDirectory("graftservevol2").toString
+    val src = java.nio.file.Paths.get(dir, "logvolume")
+    java.nio.file.Files.walk(src).forEach { p =>
+      val t = java.nio.file.Paths.get(dir2, "logvolume").resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t): Unit
+    }
+    val serve2 = new Serve(spark, Serve.Config(dir2))
+    val ports2 = serve2.start()
+    try assert(result(ports2.query, 3600) == raw)
+    finally serve2.stop()
+  }
+
   test("restart after a crash mid-compaction-swap recovers the aside partition at startup") {
     val dir = Files.createTempDirectory("graftserverecover").toString
     val serve1 = new Serve(spark, Serve.Config(dir))

@@ -273,7 +273,8 @@ class StreamsSpec extends SparkTestBase {
     val inst = graft.logql.Planner.volumeInstantPlan(
       """count_over_time({app="w"}[1h])""", h10 + HourNs, tiers).get
       .collect().map(r => (r.getAs[Map[String, String]](0), r.getDouble(1)))
-    assert(inst.toSeq == Seq((Map("app" -> "w"), 2.0)))
+    // streams carry the serving view's labels: attrs + service_name
+    assert(inst.toSeq == Seq((Map("app" -> "w", "service_name" -> "svc"), 2.0)))
     // missing layout -> empty map -> consumers fall back to raw
     assert(graft.logql.Planner.volumeFromLayout(spark, s"$dir/absent").isEmpty)
   }

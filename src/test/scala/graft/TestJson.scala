@@ -6,6 +6,15 @@ package graft
 object TestJson {
   def parse(s: String): Any = { val p = new P(s); val v = p.value(); p.ws(); v }
 
+  /** [[parse]] that also requires the value to consume the whole
+    * string (trailing whitespace aside).
+    */
+  def parseAll(s: String): Any = {
+    val p = new P(s); val v = p.value(); p.ws()
+    require(p.i == s.length, s"trailing input at offset ${p.i}")
+    v
+  }
+
   private final class P(s: String) {
     var i = 0
     def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
