@@ -35,6 +35,7 @@ object Bench {
       .configure(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftSession.initCodegenCache(spark)
     spark
   }
 

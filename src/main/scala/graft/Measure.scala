@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
@@ -15,14 +17,18 @@ import graft.obs.TaskLedger
   *   sbt "runMain graft.Measure plans <outDir> <suffix> name1,name2"
   *
   * decomp — every `stride`-th query by name (default 10), or those whose
-  *   name contains one of the substrings: a cold run (`first`), then
+  *   name contains one of the substrings: a cold run (`first`, with the
+  *   classes it compiled), then
   *   three runs split into BUILD (the DataFrame), PLAN (analysis,
   *   optimization and physical planning via `executedPlan`, no job) and
   *   EXEC (the count()); the median run by wall prints with compute =
-  *   Σ task time / cores, cpu, gc, floor = wall − compute (scheduling,
-  *   task launch, inter-job turnaround), jobs and stages.
+  *   Σ task time / cores, cpu, gc, the classes Janino compiled and their
+  *   compile time (all threads), floor = wall − compute − compile
+  *   (scheduling, task launch, inter-job turnaround), jobs and stages.
   * floor  — first and warm-median wall of no-IO jobs, a shuffle, parquet
-  *   scans and one small LogQL query: the fixed machinery under a query.
+  *   scans and one small LogQL query: the fixed machinery under a query;
+  *   then that LogQL query at a second window, with the classes it
+  *   compiles (0 when generated code is reused across windows).
   * plans  — each named query's `.explain("formatted")` into
   *   `<outDir>/<name><suffix>.txt` (the `plans/<round>/` evidence files).
   */
@@ -30,6 +36,15 @@ object Measure {
 
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  /** (classes compiled, compile seconds) across all threads while `f` ran. */
+  private def compiled(f: => Unit): (Long, Double) = {
+    val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t0 = CodeGenerator.compileTime
+    f
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+      (CodeGenerator.compileTime - t0) / 1e9)
   }
 
   def main(args: Array[String]): Unit = {
@@ -61,45 +76,65 @@ object Measure {
       }.map(_._1)
     var wallSum = 0.0
     var computeSum = 0.0
+    var compileSum = 0.0
+    var compilesSum = 0L
+    var firstSum = 0.0
+    var firstCompileSum = 0.0
     sample.foreach { q =>
       try {
         // cold run pays fixture build, codegen and plan caches once
-        val first = time(q.run(spark, sfDir).count())
+        var first = 0.0
+        val (firstCompiles, firstCompile) =
+          compiled { first = time(q.run(spark, sfDir).count()) }
         val runs = (1 to 3).map { i =>
           val group = s"decomp:${q.name}:$i"
           TaskLedger.begin(sc, group)
           sc.setJobGroup(group, q.name)
           try {
             var df: DataFrame = null
-            val build = time { df = q.run(spark, sfDir) }
-            val plan = time { df.queryExecution.executedPlan; () }
-            val exec = time { df.count(); () }
-            (group, build, plan, exec)
+            var build, plan, exec = 0.0
+            val cg = compiled {
+              build = time { df = q.run(spark, sfDir) }
+              plan = time { df.queryExecution.executedPlan; () }
+              exec = time { df.count(); () }
+            }
+            (group, build, plan, exec, cg)
           } finally sc.clearJobGroup()
         }
         TaskLedger.drain(10000L): Unit
         val taken = runs.map(r => r -> TaskLedger.take(r._1).get)
-        val ((_, build, plan, exec), g) =
+        val ((_, build, plan, exec, (compiles, compile)), g) =
           taken.sortBy { case (r, _) => r._2 + r._3 + r._4 }.apply(1)
         val wall = build + plan + exec
         val compute = g.runMs / 1000.0 / cores
         val cpu = g.cpuNs / 1e9 / cores
         val gc = g.gcMs / 1000.0 / cores
+        val floor = wall - compute - compile
         wallSum += wall
         computeSum += compute
+        compileSum += compile
+        compilesSum += compiles
+        firstSum += first
+        firstCompileSum += firstCompile
         println(f"[decomp] ${q.name}%-36s first=$first%.3f " +
+          f"(compiles=$firstCompiles%3d compile=$firstCompile%.3f) " +
           f"build=$build%.3f plan=$plan%.3f exec=$exec%.3f wall=$wall%.3f " +
           f"compute=$compute%.3f cpu=$cpu%.3f gc=$gc%.3f " +
-          f"floor=${wall - compute}%.3f (${100 * (wall - compute) / wall}%.0f%%) " +
+          f"compiles=$compiles%3d compile=$compile%.3f " +
+          f"floor=$floor%.3f (${100 * floor / wall}%.0f%%) " +
           f"jobs=${g.jobs.size}%2d stages=${g.stages.size}%2d")
       } catch { case e: Throwable =>
         println(s"[decomp] ${q.name} failed: ${e.getMessage}")
       }
     }
+    val floorSum = wallSum - computeSum - compileSum
+    def pct(x: Double) = 100 * x / wallSum
     println(f"[decomp] TOTAL sample=${sample.size} wall=$wallSum%.1f s " +
-      f"ideal-parallel-compute=$computeSum%.1f s " +
-      f"scheduling/coordination floor=${wallSum - computeSum}%.1f s " +
-      f"(${100 * (wallSum - computeSum) / wallSum}%.0f%% of wall)")
+      f"ideal-parallel-compute=$computeSum%.1f s (${pct(computeSum)}%.0f%%) " +
+      f"compiles=$compilesSum compile=$compileSum%.1f s (${pct(compileSum)}%.0f%%) " +
+      f"scheduling/coordination floor=$floorSum%.1f s (${pct(floorSum)}%.0f%% of wall); " +
+      f"cold runs: wall=$firstSum%.1f s compile=$firstCompileSum%.1f s " +
+      f"(${100 * firstCompileSum / firstSum}%.0f%%)")
   }
 
   private def floor(spark: SparkSession, sfDir: String,
@@ -127,14 +162,24 @@ object Measure {
       ev.agg(sum(length(col("props")))).collect(): Unit)
     // a representative small engine query end-to-end (parse + plan +
     // one grouped scan), the shape of the bench median
-    probe("logql count_over_time") {
-      graft.logql.Planner.query(
-        """count_over_time({event_type=~".+"} [1d])""",
-        graft.sources.Testdata(spark, sfDir).events
-          .select(col("ts").as("ts_ns"), col("props").as("body"),
-            map(lit("event_type"), col("event_type")).as("labels")))
-        .count(): Unit
-    }
+    val logs = graft.sources.Testdata(spark, sfDir).events
+      .select(col("ts").as("ts_ns"), col("props").as("body"),
+        map(lit("event_type"), col("event_type")).as("labels"))
+    def logql(from: DataFrame): Unit = graft.logql.Planner.query(
+      """count_over_time({event_type=~".+"} [1d])""", from).count(): Unit
+    probe("logql count_over_time")(logql(logs))
+    // the same query over two windows of the log, as a server asks it:
+    // only the window bounds differ, so the second compiles nothing when
+    // generated code is shared across windows
+    val Seq(lo, hi) = logs.agg(min("ts_ns"), max("ts_ns")).head().toSeq
+      .map(_.asInstanceOf[Long])
+    def window(a: Long, b: Long) =
+      logs.filter(col("ts_ns") >= a && col("ts_ns") < b)
+    val span = hi - lo
+    val (firstN, _) = compiled(logql(window(lo, lo + span / 2)))
+    val (secondN, secondS) = compiled(logql(window(lo + span / 4, lo + 3 * span / 4)))
+    println(f"[floor] logql count_over_time, 2nd window compiles=$secondN " +
+      f"compile=$secondS%.3f (1st window: $firstN)")
   }
 
   private def plans(spark: SparkSession, sfDir: String,

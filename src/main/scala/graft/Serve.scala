@@ -54,6 +54,9 @@ import graft.sources.{Admission, Layout, OtlpReceiver, StoragePolicy}
   */
 final class Serve(val spark: SparkSession, cfg: Serve.Config) {
 
+  // before the receiver's sinks or any request thread can compile first
+  graft.util.GraftSession.initCodegenCache(spark)
+
   val receiver = new OtlpReceiver(spark, cfg.dataDir, cfg.limits,
     cfg.logSafety, cfg.storagePolicy, cfg.retentionDays)
 

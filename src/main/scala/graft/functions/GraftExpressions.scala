@@ -332,6 +332,7 @@ object GraftFunctions {
       ))
     }
     e.injectOptimizerRule(_ => graft.plans.GraftRules.LowerSeverityPredicates)
+    e.injectColumnar(_ => graft.plans.BoundParams.Columnar)
   }
 
   /** Late registration on an existing session (tests, shells). */

@@ -11,6 +11,10 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Runs `f` with `spark` as the thread's active session. */
+  def withActive[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T =
+    spark.withActive(f)
+
   /** Bounded drain of the async listener bus (`private[spark]`,
     * reachable from this subpackage). Returns false when events were
     * still queued at the deadline — callers render what arrived.
