@@ -9,12 +9,13 @@ import org.apache.spark.sql.functions._
 import graft.obs.TaskLedger
 
 /** The measurement CLI: [[Bench]]'s session setup and fixture warm-up,
-  * task metrics from the [[graft.obs.TaskLedger]], three modes
+  * task metrics from the [[graft.obs.TaskLedger]], four modes
   * (SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS as for Bench):
   *
   *   sbt "runMain graft.Measure decomp [stride] [name1,name2]"
   *   sbt "runMain graft.Measure floor"
   *   sbt "runMain graft.Measure plans <outDir> <suffix> name1,name2"
+  *   sbt "runMain graft.Measure bpe [merges]"
   *
   * decomp — every `stride`-th query by name (default 10), or those whose
   *   name contains one of the substrings: a cold run (`first`, with the
@@ -31,6 +32,12 @@ import graft.obs.TaskLedger
   *   compiles (0 when generated code is reused across windows).
   * plans  — each named query's `.explain("formatted")` into
   *   `<outDir>/<name><suffix>.txt` (the `plans/<round>/` evidence files).
+  * bpe    — BPE trainer throughput (default 1000 merges): the corpus
+  *   end-to-end (one distributed (word, count) rollup, then the
+  *   driver-local merge loop), and the merge loop alone over a seeded
+  *   50k-word vocabulary — the rate a 32k-merge production vocabulary
+  *   extrapolates from (per-merge work is bounded by affected words).
+  *   Reads only `documents`, so it skips the query warm-up.
   */
 object Measure {
 
@@ -50,12 +57,12 @@ object Measure {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("")
     val modes: Map[String, (SparkSession, String, Seq[String]) => Unit] =
-      Map("decomp" -> decomp, "floor" -> floor, "plans" -> plans)
+      Map("decomp" -> decomp, "floor" -> floor, "plans" -> plans, "bpe" -> bpe)
     require(modes.contains(mode),
       s"usage: graft.Measure ${modes.keys.toSeq.sorted.mkString("|")} [args]")
     val spark = Bench.session(Bench.cpus)
     try {
-      Bench.warmUp(spark, Bench.sfDir)
+      if (mode != "bpe") Bench.warmUp(spark, Bench.sfDir)
       modes(mode)(spark, Bench.sfDir, args.toSeq.tail)
     } finally spark.stop()
   }
@@ -195,5 +202,33 @@ object Measure {
       try w.write(p) finally w.close()
       println(s"[plans] wrote ${f.getPath} (${p.linesIterator.size} lines)")
     }
+  }
+
+  private def bpe(spark: SparkSession, sfDir: String,
+      args: Seq[String]): Unit = {
+    val nMerges = args.headOption.map(_.toInt).getOrElse(1000)
+    val docs = graft.sources.Testdata(spark, sfDir).documents
+    // (a) the real corpus end-to-end (the synthetic vocabulary is 31
+    // words and saturates at 89 merges — confirmed by the independent
+    // python trainer — so the wall here is ≈ the one Spark rollup)
+    val t0 = System.nanoTime()
+    val merges = graft.pipeline.Bpe.train(docs, "text", nMerges)
+    val dt = (System.nanoTime() - t0) / 1e9
+    println(f"PROBE bpe_train corpus merges=${merges.size} wall=$dt%.2f s " +
+      "(incl. the one distributed (word,count) rollup)")
+    // (b) the driver-local merge LOOP at web-scale vocabulary size:
+    // 50k distinct pseudo-words (seeded, deterministic)
+    val rnd = new scala.util.Random(42)
+    val alpha = "abcdefghijklmnopqrstuvwxyz"
+    val vocab = (1 to 50000).map { _ =>
+      val len = 4 + rnd.nextInt(10)
+      (Seq.fill(len)(alpha(rnd.nextInt(26))).mkString,
+        1L + rnd.nextInt(1000))
+    }.distinct
+    val t1 = System.nanoTime()
+    val local = graft.pipeline.Bpe.trainLocal(vocab, nMerges)
+    val dt1 = (System.nanoTime() - t1) / 1e9
+    println(f"PROBE bpe_train loop vocab=${vocab.size} merges=${local.size} " +
+      f"wall=$dt1%.2f s (${local.size / dt1}%.0f merges/s driver-local)")
   }
 }

@@ -80,6 +80,24 @@ object exprs {
       copy(left = newLeft, right = newRight)
   }
 
+  /** ip_match_line(line, pattern) → any IPv4 literal in the line
+    * matches the pattern: the `|= ip("…")` line filter as one codegen'd
+    * call (reference logqlengine/ip_matcher.go line-filter form).
+    */
+  case class IpMatchLine(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = BooleanType
+    override def prettyName: String = "graft_ip_match_line"
+    override protected def nullSafeEval(line: Any, pat: Any): Any =
+      JKernels.lineIpMatches(line.asInstanceOf[UTF8String], pat.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (line, pat) =>
+        s"graft.functions.JKernels.lineIpMatches($line, $pat)")
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): IpMatchLine =
+      copy(left = newLeft, right = newRight)
+  }
+
   /** logfmt_get(line, 'key') → value or null; double-quoted values with
     * escapes (reference internal/logql/logqlengine/logfmt.go).
     */
@@ -295,6 +313,8 @@ object GraftFunctions {
   def parse_duration(c: Column): Column = col(ParseDuration(ex(c)))
   def parse_bytes(c: Column): Column = col(ParseBytes(ex(c)))
   def ip_match(ip: Column, pattern: Column): Column = col(IpMatch(ex(ip), ex(pattern)))
+  def ip_match_line(line: Column, pattern: Column): Column =
+    col(IpMatchLine(ex(line), ex(pattern)))
   def logfmt_get(line: Column, key: Column): Column = col(LogfmtGet(ex(line), ex(key)))
   def decolorize(c: Column): Column = col(Decolorize(ex(c)))
   def nfc_normalize(c: Column): Column = col(NfcNormalize(ex(c)))
@@ -311,6 +331,7 @@ object GraftFunctions {
     "graft_parse_duration" -> { args => ParseDuration(args.head) },
     "graft_parse_bytes" -> { args => ParseBytes(args.head) },
     "graft_ip_match" -> { args => IpMatch(args(0), args(1)) },
+    "graft_ip_match_line" -> { args => IpMatchLine(args(0), args(1)) },
     "graft_logfmt_get" -> { args => LogfmtGet(args(0), args(1)) },
     "graft_decolorize" -> { args => Decolorize(args.head) },
     "graft_nfc_normalize" -> { args => NfcNormalize(args.head) },

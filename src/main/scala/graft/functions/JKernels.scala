@@ -20,6 +20,9 @@ object JKernels {
   def ipMatches(ip: UTF8String, pattern: UTF8String): Boolean =
     ip != null && pattern != null && Kernels.ipMatches(ip.toString, pattern.toString)
 
+  def lineIpMatches(line: UTF8String, pattern: UTF8String): Boolean =
+    line != null && pattern != null && Kernels.lineIpMatches(line.toString, pattern.toString)
+
   def logfmtGet(line: UTF8String, key: UTF8String): UTF8String =
     if (line == null || key == null) null
     else Kernels.logfmtGet(line.toString, key.toString)

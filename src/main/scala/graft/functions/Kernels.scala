@@ -104,6 +104,19 @@ object Kernels {
     }
   }
 
+  private val Ipv4Literal =
+    java.util.regex.Pattern.compile("(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3})")
+
+  /** True when any IPv4 literal in `line` matches `pattern` — the
+    * `|= ip("…")` line filter. Literals are the successive
+    * non-overlapping matches `regexp_extract_all` would return.
+    */
+  def lineIpMatches(line: String, pattern: String): Boolean = {
+    val m = Ipv4Literal.matcher(line)
+    while (m.find()) if (ipMatches(m.group(1), pattern)) return true
+    false
+  }
+
   private[functions] def parseIp(s: String): Option[Array[Byte]] = {
     if (s == null || s.isEmpty) return None
     // Reject hostnames early: InetAddress.getByName would resolve them.

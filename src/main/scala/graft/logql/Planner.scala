@@ -137,13 +137,14 @@ object Planner {
       ctx.copy(df = ctx.df.filter(if (negate) !m else m))
 
     case LineFilterIp(patterns, negate) =>
-      // extract every IPv4 literal from the body; keep lines where ANY
-      // matches ANY of the CIDR/range/exact patterns (reference
-      // logqlengine/ip_matcher.go line-filter form, or-list included)
-      val ips = expr(
-        """regexp_extract_all(body, '(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3})', 1)""")
+      // keep lines where ANY IPv4 literal in the body matches ANY of
+      // the CIDR/range/exact patterns (reference logqlengine/
+      // ip_matcher.go line-filter form, or-list included); one native
+      // call per pattern keeps the filter in whole-stage codegen,
+      // which a higher-order exists() over the extracted literals
+      // (interpreted) would not
       val anyMatch = patterns
-        .map(p => exists(ips, ip => GraftFunctions.ip_match(ip, lit(p))))
+        .map(p => GraftFunctions.ip_match_line(col("body"), lit(p)))
         .reduce(_ || _)
       ctx.copy(df = ctx.df.filter(if (negate) !anyMatch else anyMatch))
 

@@ -61,12 +61,14 @@ object Ann {
     * (rid, rv); the result keeps all of `df`'s columns plus the chosen
     * reference id as `outCol`. The reference set broadcasts as ONE
     * array row and the argmax folds in-row, so `df` neither fans out
-    * nor shuffles. Callers guarantee a non-empty `refs`.
+    * nor shuffles. An empty `refs` assigns nothing: the one-row
+    * aggregate is dropped before the cross join, so no row comes back.
     */
-  private def assignBest(df: DataFrame, idCol: String, vecCol: String,
+  private[graft] def assignBest(df: DataFrame, idCol: String, vecCol: String,
       refs: DataFrame, outCol: String): DataFrame =
     df.crossJoin(broadcast(
-        refs.agg(collect_list(struct(col("rid"), col("rv"))).as("__refs"))))
+        refs.agg(collect_list(struct(col("rid"), col("rv"))).as("__refs"))
+          .filter(size(col("__refs")) > 0)))
       .withColumn("__scored", scoredAgainst(vecCol))
       .withColumn(outCol, argmaxBy(col("__scored"), "rid"))
       .drop("__refs", "__scored")

@@ -65,7 +65,9 @@ object Fixtures {
   // scan task, and a 32-task stage on a 400 KB fixture costs more
   // local dispatch than its scan does work (the same two-sided
   // measurement as Testdata's table layout; OPTIMIZATION_r19.md).
-  private val CacheVersion = "r19b"
+  // r21a: the four span fixtures (tq, tqm, pf, gr) became the one
+  // `spans` fixture of Views — the purge below drops the old copies.
+  private val CacheVersion = "r21a"
 
   private def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRec))
@@ -174,15 +176,9 @@ object Registry {
   def packs: Seq[QueryPack] = Seq(
     QueriesCore,
     QueriesLogQL,
-    QueriesLogQLStages,
-    QueriesLogQLMetrics,
-    QueriesLogQLMore,
-    QueriesLogQLParsed,
     QueriesTraceQL,
-    QueriesTraceQLMore,
     QueriesPromQL,
     QueriesPromQLMore,
-    QueriesParsedFrontends,
     QueriesSliding,
     QueriesMatching,
     QueriesRangeGroup,

@@ -13,19 +13,11 @@ object QueriesErrorsTemplates extends QueryPack {
 
   private val DayNs = 86400000000000L
 
-  private def logsView(td: Testdata): DataFrame =
-    td.events.select(
-      col("ts").as("ts_ns"),
-      col("props").as("body"),
-      map(
-        lit("event_type"), col("event_type"),
-        lit("user_id"), col("user_id").cast("string")).as("labels"))
-
   /** Every 5th user's bodies are truncated to 10 chars — invalid JSON
     * unless the original was that short.
     */
   private def corruptedView(td: Testdata): DataFrame =
-    logsView(td).withColumn("body",
+    Views.logs(td).withColumn("body",
       when(element_at(col("labels"), "user_id").cast("long") % 5 === 0,
         substring(col("body"), 1, 10)).otherwise(col("body")))
 
@@ -59,7 +51,7 @@ object QueriesErrorsTemplates extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """{event_type="signup"} | line_format `u={{ .user_id | trunc 2 }} T={{ ToUpper .event_type }} s={{ regexReplaceAll "n.*" .event_type "N" }}`""",
-          logsView(Testdata(s, dir)), logLimit = None) // aggregated below
+          Views.logs(Testdata(s, dir)), logLimit = None) // aggregated below
         .agg(count(lit(1)).as("n"), min(col("body")).as("min_body"),
           max(col("body")).as("max_body")),
     Some(
@@ -119,7 +111,7 @@ object QueriesErrorsTemplates extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (tier) (count_over_time({} | label_format tier="{{ .event_type | trunc 3 | ToUpper }}" [1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "tier").as("tier"), col("value"))
         .orderBy("bucket_ns", "tier"),
@@ -188,7 +180,7 @@ object QueriesErrorsTemplates extends QueryPack {
     "logql_e2e_drop_values",
     (s: SparkSession, dir: String) =>
       Planner.query("""sum by (user_id) (count_over_time({} | drop user_id="7" [1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           coalesce(try_element_at(col("labels"), lit("user_id")), lit("none")).as("user_id"),
           col("value"))
@@ -208,7 +200,7 @@ object QueriesErrorsTemplates extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """label_replace(sum by (event_type) (count_over_time({}[1d])), "etype", "E-$1", "event_type", "(.*)")""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"),
           element_at(col("labels"), "etype").as("etype"), col("value"))
@@ -226,7 +218,7 @@ object QueriesErrorsTemplates extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type, user_id) (count_over_time({} | keep event_type, user_id="7" [1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"),
           coalesce(try_element_at(col("labels"), lit("user_id")), lit("none")).as("user_id"),
@@ -276,7 +268,7 @@ object QueriesErrorsTemplates extends QueryPack {
     "logql_e2e_drop_regex",
     (s: SparkSession, dir: String) =>
       Planner.query("""sum by (user_id) (count_over_time({} | drop user_id=~"[0-9]*[02468]" [1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           coalesce(try_element_at(col("labels"), lit("user_id")), lit("none")).as("user_id"),
           col("value"))
@@ -295,7 +287,7 @@ object QueriesErrorsTemplates extends QueryPack {
   val vectorE2e: Q = Q(
     "logql_e2e_vector",
     (s: SparkSession, dir: String) =>
-      Planner.query("""vector(5) * 2 + 1""", logsView(Testdata(s, dir)))
+      Planner.query("""vector(5) * 2 + 1""", Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"), col("value"))
         .orderBy("bucket_ns"),
     Some(

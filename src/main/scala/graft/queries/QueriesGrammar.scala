@@ -18,44 +18,6 @@ object QueriesGrammar extends QueryPack {
   private val DayNs = 86400000000000L
   private val DayUs = 86400000000L
 
-  private def logsView(td: Testdata): DataFrame =
-    td.events.select(
-      col("ts").as("ts_ns"),
-      col("props").as("body"),
-      map(
-        lit("event_type"), col("event_type"),
-        lit("user_id"), col("user_id").cast("string")).as("labels"))
-
-  private def pointsView(td: Testdata): DataFrame =
-    td.events.select(
-      expr("ts div 1000").as("ts_us"),
-      lit("ev").as("name"),
-      col("value"),
-      map(
-        lit("svc"), (col("user_id") % 4).cast("string"),
-        lit("et"), col("event_type")).as("labels"))
-
-  private def spansView(td: Testdata): DataFrame =
-    Fixtures.materializedSpans(td.spark, td.dir, "gr") {
-      buildSpansView(td)
-    }
-
-  private def buildSpansView(td: Testdata): DataFrame =
-    td.lineitem.select(
-      col("l_orderkey").as("trace_id"),
-      col("l_linenumber").as("span_id"),
-      when(col("l_linenumber") > 1, floor(col("l_linenumber") / 2).cast("int"))
-        .as("parent_span_id"),
-      concat(lit("op-"), col("l_returnflag")).as("name"),
-      lit(2).as("kind"),
-      when(col("l_returnflag") === "R", 2).otherwise(0).as("status_code"),
-      round(col("l_quantity") * 1e6, 0).cast("long").as("duration_ns"),
-      (unix_timestamp(col("l_shipdate")) * 1000000000L).as("start_ns"),
-      map(
-        lit("returnflag"), col("l_returnflag"),
-        lit("linestatus"), col("l_linestatus"),
-        lit("quantity"), col("l_quantity").cast("string")).as("attrs"))
-
   /** Ingest-materialized attr-count rollup for compare(): pre-exploded
     * (day bucket × status/kind/name dims × attr × value) counts, built
     * once per sf dir — the per-query compare() plan scans THIS table
@@ -65,7 +27,7 @@ object QueriesGrammar extends QueryPack {
   private def compareCube(td: Testdata): TraceQL.AttrCube =
     TraceQL.AttrCube(
       Fixtures.materialized(td.spark, td.dir, "grcube", "bucket_ns") {
-        TraceQL.compareAttrCounts(buildSpansView(td),
+        TraceQL.compareAttrCounts(Views.spans(td),
           Seq("name", "kind", "status_code"))
       }, DayNs)
 
@@ -84,7 +46,7 @@ object QueriesGrammar extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type) (count_over_time({event_type="error"} |> `<_>"k": 7<_>` !> `<_>"k": 71<_>` [1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns"),
@@ -151,7 +113,7 @@ object QueriesGrammar extends QueryPack {
     (s: SparkSession, dir: String) =>
       TraceQL.plan(
           """{ quantity > 20 } | by(linestatus) | count() > 3 | select(quantity)""",
-          spansView(Testdata(s, dir)))
+          Views.spans(Testdata(s, dir)))
         .select(col("trace_id"), col("by_value"), col("n_spans"),
           col("agg_value"), col("quantity_sum")),
     Some(
@@ -168,7 +130,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_e2e_status_literal",
     (s: SparkSession, dir: String) =>
       TraceQL.plan("""{ status = error } | count() >= 2""",
-          spansView(Testdata(s, dir)))
+          Views.spans(Testdata(s, dir)))
         .select(col("trace_id"), col("n_spans"), col("agg_value")),
     Some(
       s"""WITH spans AS ($oracleSpans)
@@ -184,7 +146,7 @@ object QueriesGrammar extends QueryPack {
     "promql_e2e_offset",
     (s: SparkSession, dir: String) =>
       PromQL.range("""sum by (svc) (count_over_time(ev[1d] offset 1d))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"), col("value"))
         .orderBy("bucket_us", "svc"),
@@ -199,7 +161,7 @@ object QueriesGrammar extends QueryPack {
     "promql_e2e_bool",
     (s: SparkSession, dir: String) =>
       PromQL.range("""count_over_time(ev[1d]) > bool 100""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))
@@ -220,7 +182,7 @@ object QueriesGrammar extends QueryPack {
     "promql_e2e_quantile_without",
     (s: SparkSession, dir: String) =>
       PromQL.range("""quantile without (et) (0.9, count_over_time(ev[1d]))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           round(col("value"), 6).as("value"))
@@ -239,7 +201,7 @@ object QueriesGrammar extends QueryPack {
     "promql_e2e_stddev",
     (s: SparkSession, dir: String) =>
       PromQL.range("""stddev by (svc) (count_over_time(ev[1d]))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           round(col("value"), 6).as("value"))
@@ -293,11 +255,11 @@ object QueriesGrammar extends QueryPack {
          |  GROUP BY bucket_us)
          |ORDER BY bucket_us""".stripMargin))
 
-  /** spansView + the full intrinsic surface: statusMessage,
+  /** Views.spans + the full intrinsic surface: statusMessage,
     * instrumentation scope, event/link arrays, resource service.name.
     */
   private def richSpansView(td: Testdata): DataFrame =
-    spansView(td)
+    Views.spans(td)
       .withColumn("status_message",
         when(col("status_code") === 2, lit("forced error")).otherwise(lit("")))
       .withColumn("scope_name",
@@ -400,7 +362,7 @@ object QueriesGrammar extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type) (count_over_time({event_type=~"[[:lower:]]+"} |~ `"k": [[:digit:]][[:digit:]]` |~ "^{" [1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -421,7 +383,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_e2e_parent_scope",
     (s: SparkSession, dir: String) =>
       TraceQL.plan("""{ parent.returnflag = "R" && quantity > 40 }""",
-          spansView(Testdata(s, dir)))
+          Views.spans(Testdata(s, dir)))
         .select(col("trace_id"), col("n_spans")),
     Some(
       s"""WITH spans AS (SELECT l_orderkey AS trace_id, l_linenumber AS span_id,
@@ -440,7 +402,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_e2e_metrics_rate",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ status = error } | rate() | by(linestatus)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L)
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L)
         .select(col("bucket_ns"), col("by_value"), col("value")),
     Some(
       s"""SELECT CAST(epoch(l_shipdate) AS BIGINT) * 1000000000
@@ -463,7 +425,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_metrics_min",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ quantity > 10 } | min_over_time(quantity) | by(linestatus)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L)
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L)
         .select(col("bucket_ns"), col("by_value"), col("value")),
     Some(
       s"""SELECT $bucketNs AS bucket_ns,
@@ -475,7 +437,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_metrics_avg",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ status = error } | avg_over_time(duration) | by(linestatus)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L)
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L)
         .select(col("bucket_ns"), col("by_value"), col("value")),
     Some(
       s"""SELECT $bucketNs AS bucket_ns, l_linestatus AS by_value,
@@ -488,7 +450,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_metrics_sum",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ linestatus = "F" } | sum_over_time(duration) | by(returnflag)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L)
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L)
         .select(col("bucket_ns"), col("by_value"), col("value")),
     Some(
       s"""SELECT $bucketNs AS bucket_ns, l_returnflag AS by_value,
@@ -500,7 +462,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_metrics_quantile",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ quantity > 30 } | quantile_over_time(duration, 0.5) | by(linestatus)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L)
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L)
         .select(col("bucket_ns"), col("by_value"), col("value")),
     Some(
       s"""SELECT $bucketNs AS bucket_ns, l_linestatus AS by_value,
@@ -512,7 +474,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_metrics_topk",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ quantity > 5 } | rate() | by(returnflag) | topk(2)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L)
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L)
         .select(col("bucket_ns"), col("by_value"), col("value")),
     Some(
       s"""SELECT bucket_ns, by_value, value FROM (
@@ -535,7 +497,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_metrics_compare",
     (s: SparkSession, dir: String) =>
       TraceQL.planMetrics("""{ } | compare({ status = error }, 2)""",
-          spansView(Testdata(s, dir)), stepNs = 86400000000000L,
+          Views.spans(Testdata(s, dir)), stepNs = 86400000000000L,
           cube = Some(compareCube(Testdata(s, dir))))
         .select(col("bucket_ns"), col("meta_type"), col("attr"),
           col("attr_value"), col("n")),
@@ -581,7 +543,7 @@ object QueriesGrammar extends QueryPack {
       "traceql_metrics_compare_window",
       (spark: SparkSession, dir: String) =>
         TraceQL.planMetrics(s"""{ } | compare({ status = error }, 2, $s, $e)""",
-            spansView(Testdata(spark, dir)), stepNs = 86400000000000L,
+            Views.spans(Testdata(spark, dir)), stepNs = 86400000000000L,
             cube = Some(compareCube(Testdata(spark, dir))))
           .select(col("bucket_ns"), col("meta_type"), col("attr"),
             col("attr_value"), col("n")),
@@ -623,7 +585,7 @@ object QueriesGrammar extends QueryPack {
     * unscoped coalesce (chstorage/attributes.go:251-266).
     */
   private def dualAttrsView(td: Testdata): DataFrame =
-    spansView(td)
+    Views.spans(td)
       .withColumn("attrs", map_concat(col("attrs"),
         map(lit("team"), element_at(col("attrs"), "linestatus"))))
       .withColumn("resource_attrs",
@@ -651,7 +613,7 @@ object QueriesGrammar extends QueryPack {
     "traceql_tag_autocomplete_filtered",
     (s: SparkSession, dir: String) =>
       TraceQL.tagValues("""{ returnflag = "R" }""", "linestatus",
-        spansView(Testdata(s, dir))),
+        Views.spans(Testdata(s, dir))),
     Some(
       """SELECT DISTINCT l_linestatus AS value FROM lineitem
         |WHERE l_returnflag = 'R' ORDER BY value""".stripMargin))

@@ -17,24 +17,6 @@ object QueriesMatching extends QueryPack {
   private val DayNs = 86400000000000L
   private val DayUs = 86400000000L
 
-  private def logsView(td: Testdata): DataFrame =
-    td.events.select(
-      col("ts").as("ts_ns"),
-      col("props").as("body"),
-      map(
-        lit("event_type"), col("event_type"),
-        lit("user_id"), col("user_id").cast("string")).as("labels"))
-
-  /** points with two labels so many-to-one matching is non-trivial. */
-  private def pointsView(td: Testdata): DataFrame =
-    td.events.select(
-      expr("ts div 1000").as("ts_us"),
-      lit("ev").as("name"),
-      col("value"),
-      map(
-        lit("svc"), (col("user_id") % 4).cast("string"),
-        lit("et"), col("event_type")).as("labels"))
-
   /** One-to-one `/ on(event_type)` through the LogQL parser: user 7's
     * share of each event type per step; result labels = the on() set.
     */
@@ -43,7 +25,7 @@ object QueriesMatching extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type) (count_over_time({user_id="7"}[1d])) / on(event_type) sum by (event_type) (count_over_time({}[1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -67,7 +49,7 @@ object QueriesMatching extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type, user_id) (count_over_time({}[1d])) / on(user_id) group_left sum by (user_id) (count_over_time({}[1d]))""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"),
           element_at(col("labels"), "user_id").as("user_id"), col("value"))
@@ -93,7 +75,7 @@ object QueriesMatching extends QueryPack {
     (s: SparkSession, dir: String) =>
       PromQL.range(
           """count_over_time(ev[1d]) / on(svc) group_left sum by (svc) (count_over_time(ev[1d]))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))
@@ -119,7 +101,7 @@ object QueriesMatching extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type) (count_over_time({}[1d])) * 2 + 10 - 4""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -134,7 +116,7 @@ object QueriesMatching extends QueryPack {
     "promql_e2e_precedence",
     (s: SparkSession, dir: String) =>
       PromQL.range("""(count_over_time(ev[1d]) + 10) * 2 - 100""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))

@@ -13,21 +13,12 @@ object QueriesPromFns extends QueryPack {
 
   private val DayUs = 86400000000L
 
-  private def pointsView(td: Testdata): DataFrame =
-    td.events.select(
-      expr("ts div 1000").as("ts_us"),
-      lit("ev").as("name"),
-      col("value"),
-      map(
-        lit("svc"), (col("user_id") % 4).cast("string"),
-        lit("et"), col("event_type")).as("labels"))
-
   /** clamp(sqrt(·)) composition — identical IEEE shapes both sides. */
   val mathFns: Q = Q(
     "promql_e2e_math_fns",
     (s: SparkSession, dir: String) =>
       PromQL.range("""clamp(sqrt(sum by (svc) (count_over_time(ev[1d]))), 10, 50)""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           round(col("value"), 6).as("value"))
@@ -47,7 +38,7 @@ object QueriesPromFns extends QueryPack {
     (s: SparkSession, dir: String) =>
       PromQL.range(
           """label_join(label_replace(sum by (svc) (count_over_time(ev[1d])), "env", "zone-$1", "svc", "(.*)"), "combo", "|", "svc", "env")""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "env").as("env"),
@@ -70,7 +61,7 @@ object QueriesPromFns extends QueryPack {
     "promql_e2e_overtime_ext",
     (s: SparkSession, dir: String) =>
       PromQL.range("""quantile_over_time(0.5, ev[1d]) * present_over_time(ev[1d])""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"),
@@ -87,7 +78,7 @@ object QueriesPromFns extends QueryPack {
   val stddevOverTime: Q = Q(
     "promql_e2e_stddev_over_time",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""stddev_over_time(ev[1d])""", pointsView(Testdata(s, dir)))
+      PromQL.range("""stddev_over_time(ev[1d])""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"),
@@ -110,7 +101,7 @@ object QueriesPromFns extends QueryPack {
       "promql_e2e_subquery",
       (s: SparkSession, dir: String) =>
         PromQL.range("""max_over_time(sum by (svc) (count_over_time(ev[6h]))[1d:6h])""",
-            pointsView(Testdata(s, dir)))
+            Views.evPoints(Testdata(s, dir)))
           .select(col("bucket_us"),
             element_at(col("labels"), "svc").as("svc"), col("value"))
           .orderBy("bucket_us", "svc"),
@@ -136,7 +127,7 @@ object QueriesPromFns extends QueryPack {
       "promql_e2e_instant_expr",
       (s: SparkSession, dir: String) =>
         PromQL.instantExpr("""sum by (svc) (count_over_time(ev[1d])) * 2""",
-            pointsView(Testdata(s, dir)), evalTsUs = tUs)
+            Views.evPoints(Testdata(s, dir)), evalTsUs = tUs)
           .select(col("ts_us"),
             element_at(col("labels"), "svc").as("svc"), col("value"))
           .orderBy("svc"),
@@ -157,7 +148,7 @@ object QueriesPromFns extends QueryPack {
     Q(
       "promql_e2e_matrix_raw",
       (s: SparkSession, dir: String) =>
-        PromQL.matrix("""ev{svc="2"}[5d]""", pointsView(Testdata(s, dir)),
+        PromQL.matrix("""ev{svc="2"}[5d]""", Views.evPoints(Testdata(s, dir)),
             evalTsUs = tUs)
           .select(col("ts_us"),
             element_at(col("labels"), "svc").as("svc"),
@@ -178,7 +169,7 @@ object QueriesPromFns extends QueryPack {
     "promql_e2e_absent",
     (s: SparkSession, dir: String) =>
       PromQL.range("""absent_over_time(ev{svc="9"}[1d])""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"), col("value"))
         .orderBy("bucket_us"),
     Some(
@@ -198,7 +189,7 @@ object QueriesPromFns extends QueryPack {
       "promql_e2e_at_modifier",
       (s: SparkSession, dir: String) =>
         PromQL.range(s"""sum by (svc) (count_over_time(ev[1d] @ $tSec))""",
-            pointsView(Testdata(s, dir)))
+            Views.evPoints(Testdata(s, dir)))
           .select(col("bucket_us"),
             element_at(col("labels"), "svc").as("svc"), col("value"))
           .orderBy("bucket_us", "svc"),
@@ -231,7 +222,7 @@ object QueriesPromFns extends QueryPack {
             """sum by (svc) (count_over_time(ev[1d] @ end()))
               | - sum by (svc) (count_over_time(ev[1d] @ start()))""".stripMargin
               .replace("\n", " "),
-            pointsView(Testdata(s, dir)),
+            Views.evPoints(Testdata(s, dir)),
             atRange = Some((startUs, endUs)))
           .select(col("bucket_us"),
             element_at(col("labels"), "svc").as("svc"), col("value"))
@@ -275,7 +266,7 @@ object QueriesPromFns extends QueryPack {
   val resetsE2e: Q = Q(
     "promql_e2e_resets",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""resets(ev[1d])""", pointsView(Testdata(s, dir)))
+      PromQL.range("""resets(ev[1d])""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))
@@ -290,7 +281,7 @@ object QueriesPromFns extends QueryPack {
   val changesE2e: Q = Q(
     "promql_e2e_changes",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""changes(ev[1d])""", pointsView(Testdata(s, dir)))
+      PromQL.range("""changes(ev[1d])""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))
@@ -305,7 +296,7 @@ object QueriesPromFns extends QueryPack {
   val ideltaE2e: Q = Q(
     "promql_e2e_idelta",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""idelta(ev[1d])""", pointsView(Testdata(s, dir)))
+      PromQL.range("""idelta(ev[1d])""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))
@@ -337,7 +328,7 @@ object QueriesPromFns extends QueryPack {
   val derivE2e: Q = Q(
     "promql_e2e_deriv",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""deriv(ev[1d])""", pointsView(Testdata(s, dir)))
+      PromQL.range("""deriv(ev[1d])""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"),
@@ -355,7 +346,7 @@ object QueriesPromFns extends QueryPack {
   val predictE2e: Q = Q(
     "promql_e2e_predict_linear",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""predict_linear(ev[1d], 3600)""", pointsView(Testdata(s, dir)))
+      PromQL.range("""predict_linear(ev[1d], 3600)""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"),
@@ -377,7 +368,7 @@ object QueriesPromFns extends QueryPack {
     "promql_e2e_count_values",
     (s: SparkSession, dir: String) =>
       PromQL.range("""count_values("cnt", sum by (svc) (count_over_time(ev[1d])))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "cnt").as("cnt"), col("value"))
         .orderBy("bucket_us", "cnt"),
@@ -399,7 +390,7 @@ object QueriesPromFns extends QueryPack {
     "promql_e2e_date_fns",
     (s: SparkSession, dir: String) =>
       PromQL.range("""hour(time()) + day_of_week(time()) * 100""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"), col("value"))
         .orderBy("bucket_us"),
     Some(
@@ -419,7 +410,7 @@ object QueriesPromFns extends QueryPack {
   val absentFnE2e: Q = Q(
     "promql_e2e_absent_fn",
     (s: SparkSession, dir: String) =>
-      PromQL.range("""absent(ev{et="__none__"})""", pointsView(Testdata(s, dir)))
+      PromQL.range("""absent(ev{et="__none__"})""", Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"), col("value"))
         .orderBy("bucket_us"),
     Some(
@@ -436,7 +427,7 @@ object QueriesPromFns extends QueryPack {
     "promql_e2e_timestamp",
     (s: SparkSession, dir: String) =>
       PromQL.range("""timestamp(sum by (svc) (count_over_time(ev[1d])))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"), col("value"))
         .orderBy("bucket_us", "svc"),
@@ -454,7 +445,7 @@ object QueriesPromFns extends QueryPack {
     (s: SparkSession, dir: String) =>
       PromQL.range(
           """sgn(sum by (svc) (count_over_time(ev[1d])) - 5000.5) + round(sum by (svc) (count_over_time(ev[1d])) * 7, 100) - -0x10 + 1.5e1 * -1""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"), col("value"))
         .orderBy("bucket_us", "svc"),
@@ -473,7 +464,7 @@ object QueriesPromFns extends QueryPack {
     "promql_e2e_vector_fn",
     (s: SparkSession, dir: String) =>
       PromQL.range("""vector(7) + sum(count_over_time({__name__="ev"}[5m]))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"), col("value"))
         .orderBy("bucket_us"),
     Some(
@@ -490,7 +481,7 @@ object QueriesPromFns extends QueryPack {
   val tsOfE2e: Q = Q(
     "promql_e2e_ts_of",
     (s: SparkSession, dir: String) => {
-      val pv = pointsView(Testdata(s, dir))
+      val pv = Views.evPoints(Testdata(s, dir))
       def one(fn: String, as: String): DataFrame =
         PromQL.range(s"$fn(ev[1d])", pv)
           .select(col("bucket_us"),

@@ -18,15 +18,6 @@ object QueriesPromFns2 extends QueryPack {
 
   private val DayUs = 86400000000L
 
-  private def pointsView(td: Testdata): DataFrame =
-    td.events.select(
-      expr("ts div 1000").as("ts_us"),
-      lit("ev").as("name"),
-      col("value"),
-      map(
-        lit("svc"), (col("user_id") % 4).cast("string"),
-        lit("et"), col("event_type")).as("labels"))
-
   private val oracleCounts =
     s"""SELECT epoch_us(ts) - epoch_us(ts) % $DayUs AS bucket_us,
        |  CAST(user_id % 4 AS VARCHAR) AS svc, CAST(COUNT(*) AS DOUBLE) AS n
@@ -42,7 +33,7 @@ object QueriesPromFns2 extends QueryPack {
     (s: SparkSession, dir: String) =>
       PromQL.range(
           """deg(sin(sum by (svc) (count_over_time(ev[1d]))) atan2 cos(sum by (svc) (count_over_time(ev[1d]))))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           round(col("value"), 6).as("value"))
@@ -62,7 +53,7 @@ object QueriesPromFns2 extends QueryPack {
     (s: SparkSession, dir: String) =>
       PromQL.range(
           """sum by (svc) (count_over_time(ev[1d])) / scalar(sum(count_over_time(ev[1d])))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           round(col("value"), 9).as("value"))
@@ -80,7 +71,7 @@ object QueriesPromFns2 extends QueryPack {
     "promql_e2e_group_agg",
     (s: SparkSession, dir: String) =>
       PromQL.range("""group by (et) (count_over_time(ev{svc="1"}[1d]))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "et").as("et"), col("value"))
         .orderBy("bucket_us", "et"),
@@ -97,7 +88,7 @@ object QueriesPromFns2 extends QueryPack {
     "promql_e2e_ne_bool",
     (s: SparkSession, dir: String) =>
       PromQL.range("""sum by (svc) (count_over_time(ev[1d])) % 2 != bool 0""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"), col("value"))
         .orderBy("bucket_us", "svc"),
@@ -115,7 +106,7 @@ object QueriesPromFns2 extends QueryPack {
     "promql_e2e_mad",
     (s: SparkSession, dir: String) =>
       PromQL.range("""mad_over_time(ev{svc="2"}[1d])""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "et").as("et"),
           round(col("value"), 6).as("value"))
@@ -135,7 +126,7 @@ object QueriesPromFns2 extends QueryPack {
     "promql_e2e_holt_winters",
     (s: SparkSession, dir: String) =>
       PromQL.range("""holt_winters(ev{svc="3"}[1d], 0.5, 0.3)""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "et").as("et"),
           round(col("value"), 6).as("value"))
@@ -184,7 +175,7 @@ object QueriesPromFns2 extends QueryPack {
       (s: SparkSession, dir: String) =>
         PromQL.instant(
             """max_over_time(sum by (svc) (count_over_time(ev[1d]))[3d:1d])""",
-            pointsView(Testdata(s, dir)), evalTsUs = tUs)
+            Views.evPoints(Testdata(s, dir)), evalTsUs = tUs)
           .select(col("ts_us"),
             element_at(col("labels"), "svc").as("svc"), col("value"))
           .orderBy("svc"),
@@ -209,7 +200,7 @@ object QueriesPromFns2 extends QueryPack {
     (s: SparkSession, dir: String) =>
       PromQL.range(
           """sort_by_label(sum by (svc, et) (count_over_time(ev[1d])), "et", "svc")""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value")),
@@ -244,7 +235,7 @@ object QueriesPromFns2 extends QueryPack {
     "promql_e2e_limitk",
     (s: SparkSession, dir: String) =>
       PromQL.range("""limitk(3, sum by (svc, et) (count_over_time(ev[1d])))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))
@@ -264,7 +255,7 @@ object QueriesPromFns2 extends QueryPack {
     "promql_e2e_limit_ratio",
     (s: SparkSession, dir: String) =>
       PromQL.range("""limit_ratio(0.4, sum by (svc, et) (count_over_time(ev[1d])))""",
-          pointsView(Testdata(s, dir)))
+          Views.evPoints(Testdata(s, dir)))
         .select(col("bucket_us"),
           element_at(col("labels"), "svc").as("svc"),
           element_at(col("labels"), "et").as("et"), col("value"))

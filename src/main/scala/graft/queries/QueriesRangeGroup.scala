@@ -28,14 +28,6 @@ object QueriesRangeGroup extends QueryPack {
 
   private val DayNs = 86400000000000L
 
-  private def logsView(td: Testdata): DataFrame =
-    td.events.select(
-      col("ts").as("ts_ns"),
-      col("props").as("body"),
-      map(
-        lit("event_type"), col("event_type"),
-        lit("user_id"), col("user_id").cast("string")).as("labels"))
-
   /** `avg_over_time({} | unwrap user_id [1d]) by (event_type)` — one
     * pooled average per (bucket, event_type), across all user streams.
     */
@@ -44,7 +36,7 @@ object QueriesRangeGroup extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """avg_over_time({} | unwrap user_id [1d]) by (event_type)""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -61,7 +53,7 @@ object QueriesRangeGroup extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """max_over_time({} | unwrap user_id [1d]) without (user_id)""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -79,7 +71,7 @@ object QueriesRangeGroup extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """quantile_over_time(0.5, {} | unwrap user_id [1d]) by (event_type)""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -99,7 +91,7 @@ object QueriesRangeGroup extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """approx_quantile_over_time(0.5, {} | unwrap user_id [1d]) by (event_type)""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -116,7 +108,7 @@ object QueriesRangeGroup extends QueryPack {
     "logql_volume",
     (s: SparkSession, dir: String) =>
       graft.logql.Discovery.volume(
-          logsView(Testdata(s, dir)),
+          Views.logs(Testdata(s, dir)),
           """{event_type=~".+"}""", Seq("event_type"))
         .select(element_at(col("labels"), "event_type").as("event_type"),
           col("value")),
@@ -129,7 +121,7 @@ object QueriesRangeGroup extends QueryPack {
   val detectedLabelsQ: Q = Q(
     "logql_detected_labels",
     (s: SparkSession, dir: String) =>
-      graft.logql.Discovery.detectedLabels(logsView(Testdata(s, dir))),
+      graft.logql.Discovery.detectedLabels(Views.logs(Testdata(s, dir))),
     Some("""SELECT 'event_type' AS label,
            |  COUNT(DISTINCT event_type) AS cardinality FROM events
            |UNION ALL
@@ -143,7 +135,7 @@ object QueriesRangeGroup extends QueryPack {
   val detectedFieldsQ: Q = Q(
     "logql_detected_fields",
     (s: SparkSession, dir: String) =>
-      graft.logql.Discovery.detectedFields(logsView(Testdata(s, dir))),
+      graft.logql.Discovery.detectedFields(Views.logs(Testdata(s, dir))),
     Some("""SELECT 'k' AS label, 'int' AS type,
            |  COUNT(DISTINCT json_extract_string(props, '$.k')) AS cardinality
            |FROM events""".stripMargin))

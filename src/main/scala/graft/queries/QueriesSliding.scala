@@ -21,23 +21,6 @@ object QueriesSliding extends QueryPack {
   private val StepUs  = 21600000000L
   private val RangeUs = 86400000000L
 
-  /** events as the logs table (same view as QueriesLogQLParsed). */
-  private def logsView(td: Testdata): DataFrame =
-    td.events.select(
-      col("ts").as("ts_ns"),
-      col("props").as("body"),
-      map(
-        lit("event_type"), col("event_type"),
-        lit("user_id"), col("user_id").cast("string")).as("labels"))
-
-  /** events as the points table (same view as QueriesParsedFrontends). */
-  private def pointsView(td: Testdata): DataFrame =
-    td.events.select(
-      expr("ts div 1000").as("ts_us"),
-      col("event_type").as("name"),
-      col("value"),
-      map(lit("svc"), (col("user_id") % 4).cast("string")).as("labels"))
-
   /** DuckDB step fan-out over epoch-ns: rows exploded to covering steps. */
   private def oracleFanoutNs(from: String, where: String): String =
     s"""SELECT step_ns, t, event_type, user_id FROM (
@@ -58,7 +41,7 @@ object QueriesSliding extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """sum by (event_type) (count_over_time({}[1d])) / 86400""",
-          logsView(Testdata(s, dir)), stepNs = Some(StepNs))
+          Views.logs(Testdata(s, dir)), stepNs = Some(StepNs))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"), col("value"))
         .orderBy("bucket_ns", "event_type"),
@@ -78,7 +61,7 @@ object QueriesSliding extends QueryPack {
     Q(
       "promql_rate_sliding",
       (s: SparkSession, dir: String) =>
-        PromQL.range("""rate(error[1d])""", pointsView(Testdata(s, dir)),
+        PromQL.range("""rate(error[1d])""", Views.points(Testdata(s, dir)),
             stepUs = Some(StepUs))
           .select(col("bucket_us"), element_at(col("labels"), "svc").as("svc"),
             col("value"))
@@ -115,7 +98,7 @@ object QueriesSliding extends QueryPack {
     (s: SparkSession, dir: String) =>
       Planner.query(
           """quantile_over_time(0.95, {event_type="click"} | json | keep event_type, user_id | unwrap k [1d])""",
-          logsView(Testdata(s, dir)))
+          Views.logs(Testdata(s, dir)))
         .select(col("bucket_ns"),
           element_at(col("labels"), "event_type").as("event_type"),
           element_at(col("labels"), "user_id").as("user_id"),

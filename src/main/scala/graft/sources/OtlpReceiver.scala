@@ -40,7 +40,8 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
     limits: Admission.LimitsConfig = Admission.LimitsConfig(),
     logSafety: Option[graft.streaming.LogSafety.Config] = None,
     storagePolicy: Option[StoragePolicy.Policy] = None,
-    retentionDays: Int = 0) {
+    retentionDays: Int = 0,
+    nowNs: () => Long = () => System.nanoTime()) {
 
   private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
   import spark.implicits._
@@ -77,7 +78,8 @@ final class OtlpReceiver(spark: SparkSession, dataDir: String,
 
   // ---- admission state (one budget per receiver = per tenant) ----
   val stats = new Admission.Stats
-  private val bucket = new Admission.TokenBucket(limits.ingestBytesPerSecond)
+  // the rate budget's clock is a constructor seam (tests hold time still)
+  private val bucket = new Admission.TokenBucket(limits.ingestBytesPerSecond, nowNs)
   private val inFlightTotal = new java.util.concurrent.atomic.AtomicLong
   private def tracker() =
     new Admission.InFlightTracker(limits.maxInFlightBytes, inFlightTotal)

@@ -211,9 +211,12 @@ class AdmissionSpec extends SparkTestBase {
   test("HTTP edge: rate shed = OTLP partial success; oversized body = 413; remote-write = 429") {
     val payload = logPayload(0)
     val dir = Files.createTempDirectory("graftadm1").toString
+    // the bucket's clock stands still unless the test advances it, so
+    // the burst cannot refill however slow the POSTs are
+    val clockNs = new java.util.concurrent.atomic.AtomicLong(0L)
     val recv = new OtlpReceiver(spark, dir, Admission.LimitsConfig(
       ingestBytesPerSecond = math.max(220L, payload.length * 2L + 20L),
-      maxBodyBytes = 4096))
+      maxBodyBytes = 4096), nowNs = () => clockNs.get())
     val port = recv.start()
     try {
       // burst admits two, third sheds: 200 + partial success naming
@@ -227,7 +230,7 @@ class AdmissionSpec extends SparkTestBase {
       assert(rejected == 1L && msg.contains("RESOURCE_EXHAUSTED"))
       assert(recv.stats.shedRequests.get() == 1L)
       // losslessness: the client retries after the budget refills
-      Thread.sleep(1200)
+      clockNs.addAndGet(1200000000L)
       val (c4, _) = post(s"http://127.0.0.1:$port/v1/logs", logPayload(3))
       assert(c4 == 200)
       // remote-write sheds as 429 (its clients speak Retry-After);

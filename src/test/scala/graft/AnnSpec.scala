@@ -36,4 +36,15 @@ class AnnSpec extends SparkTestBase {
         array(lit(1.0), lit(0.0)))).head().getDouble(0)
     assert(nan.isNaN, nan)
   }
+
+  test("assignBest returns no rows against an empty reference set") {
+    import spark.implicits._
+    val vecs = Seq(1L -> Seq(1.0, 0.0), 2L -> Seq(0.0, 1.0)).toDF("id", "v")
+    val refs = Seq(10L -> Seq(1.0, 0.1), 20L -> Seq(0.1, 1.0)).toDF("rid", "rv")
+    val best = Ann.assignBest(vecs, "id", "v", refs, "best")
+      .select("id", "best").as[(Long, Long)].collect().toMap
+    assert(best == Map(1L -> 10L, 2L -> 20L), best)
+    val none = Ann.assignBest(vecs, "id", "v", refs.filter(lit(false)), "best")
+    assert(none.count() == 0L, "an empty reference set must assign no row")
+  }
 }

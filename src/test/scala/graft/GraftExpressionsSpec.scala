@@ -36,6 +36,19 @@ class GraftExpressionsSpec extends SparkTestBase {
     assert(df.collect().map(_.getBoolean(0)).toSeq == Seq(true, true, false, false))
   }
 
+  test("ip_match_line: any IPv4 literal in the line, as regexp_extract_all finds them") {
+    val lines = Seq("from 10.5.1.2 to 8.8.8.8", "no address here",
+      "then 10.4.0.9", "10.51.0.1", "x10.5.0.1y")
+    val pats = Seq("10.5.0.0/16", "10.3.0.0-10.4.255.255", "8.8.8.8")
+    val df = lines.toDF("l").crossJoin(pats.toDF("p"))
+    val got = df.select(ip_match_line(col("l"), col("p"))).collect().map(_.getBoolean(0))
+    val viaExtract = df.select(exists(
+      expr("""regexp_extract_all(l, '(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3})', 1)"""),
+      ip => ip_match(ip, col("p")))).collect().map(_.getBoolean(0))
+    assert(got.toSeq == viaExtract.toSeq)
+    assert(got.count(identity) == 4, got.toSeq)
+  }
+
   test("logfmt_get extracts quoted and bare values") {
     val line = """level=info msg="hi there" n=42"""
     val df = Seq(line).toDF("l").select(

@@ -992,6 +992,12 @@ class HttpApiSpec extends SparkTestBase {
       assert(authed(s"$base/loki/api/v1/labels")._1 == 200)
 
       val m = api.metrics
+      // the middleware records an exchange after its handler has sent the
+      // response, so the last request's outcome can land just after the
+      // client has read it
+      val deadline = System.nanoTime() + 5000000000L
+      while (m.statusCount("/loki/api/v1/labels", 200) < 1L &&
+          System.nanoTime() < deadline) Thread.sleep(10)
       assert(m.statusCount("/api/v1/query_range", 401) == 1L)
       assert(m.statusCount("/api/v1/query_range", 422) == 1L)
       assert(m.statusCount("/api/v1/query_range", 400) == 1L)
